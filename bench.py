@@ -2,7 +2,9 @@
 
 Default mode: runs the headline crawl (synthetic corpus sized to the sf of
 $SPARK_GRAFT_SF_DIR) plus every driver query at that sf, on
-local[$SPARK_GRAFT_CPUS], and prints ONE JSON line to stdout:
+local[$SPARK_GRAFT_CPUS] (default: every core this process may use, as
+`nproc` counts them; the driver heap defaults to a quarter of physical
+RAM), and prints ONE JSON line to stdout:
 
     {"metric": "crawl_pages_per_sec", "value": N, "unit": "sec",
      "queries": {...per-query seconds...}, "sf": 0.1, ...}
@@ -36,6 +38,18 @@ def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
+def machine_cpus() -> int:
+    """Cores this process may run on — what `nproc` prints."""
+    return len(os.sched_getaffinity(0))
+
+
+def driver_heap() -> str:
+    """Local-mode driver heap: a quarter of physical RAM, at least 1 GiB."""
+    with open("/proc/meminfo") as f:
+        total_kb = int(f.readline().split()[1])  # MemTotal
+    return f"{max(1024, total_kb // 1024 // 4)}m"
+
+
 def sf_of(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -50,7 +64,7 @@ def get_session(cpus: int, master: str | None = None, shuffle: int | None = None
     # local mode: the driver heap IS the executor heap for all tasks —
     # size it for the corpus cache + round checkpoints or GC serializes
     # the whole job (observed: 500k-page rounds thrash at the 8g default)
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", driver_heap())
     # shuffle/checkpoint blocks on tmpfs: the sandbox's virtual disk has
     # wildly variable latency (same run 97s vs 142s); RAM-backed local
     # dirs make bench numbers reproducible (the cluster analogue is
@@ -277,7 +291,7 @@ def _teardown_jvm() -> None:
     """Shut down the py4j gateway so the NEXT get_spark launches a fresh
     JVM. spark.stop() alone keeps the same JVM (heap, GC history, UI
     stores, tmpfs shuffle dirs) alive under the new context — the query
-    sweep must not inherit the crawl legs' 48g of old-gen history."""
+    sweep must not inherit the crawl legs' old-gen history."""
     import shutil
 
     from pyspark import SparkContext
@@ -337,7 +351,7 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
 
 def run_bench(crawl_only: bool = False) -> dict:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", machine_cpus()))
     sf = sf_of(sf_dir)
     n_pages = max(int(CRAWL_PAGES_PER_SF * sf), 200)
 
@@ -438,7 +452,7 @@ def run_mega_round() -> dict:
     from wikifrontier import synth
     from wikifrontier.frontier import CrawlConfig, _new_bloom, init_state, run_round
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", machine_cpus()))
     master = os.environ.get("SPARK_GRAFT_MASTER")
     spark = get_session(
         cpus,

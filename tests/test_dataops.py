@@ -2036,6 +2036,14 @@ def test_kmv_estimates_within_error_and_exact_when_small(spark):
     for label, truth in [("A", 20000), ("B", 20000), ("union", 30000),
                          ("intersection", 10000)]:
         assert abs(got[label] - truth) / truth < 0.25, (label, got[label])
+    # a k above the sketches' build k is rejected (a full 64-hash sketch
+    # would read as not full); a smaller k is a bottom-k of the same sets
+    ska, skb = kmv_sketch(a, "v", k=64), kmv_sketch(b, "v", k=64)
+    with pytest.raises(ValueError, match="build k=64"):
+        kmv_set_ops(ska, skb)
+    got = {r["set_label"]: r["est_distinct"]
+           for r in kmv_set_ops(ska, skb, k=32).collect()}
+    assert abs(got["union"] - 30000) / 30000 < 0.6, got
 
 
 def test_random_walks_deterministic_and_dead_end_holds(spark):

@@ -128,15 +128,37 @@ class TestBloomOnWriteOnceStore:
 
     def test_snapshot_restore_across_stores(self, spark, urls, tmp_path):
         """save() on a write-once snapshot dir, load() back into a plain
-        local working dir — the two backends interoperate byte-wise."""
+        local working dir — the two backends interoperate byte-wise. The
+        snapshot is ONE Spark job of at most defaultParallelism tasks,
+        however many buckets, and leaves only compacted bases behind."""
+        work = str(tmp_path / "work")
         bloom = PartitionedBloomSeen(
-            storage_dir=str(tmp_path / "work"), buckets=8,
-            nbits_per_bucket=1 << 15, k=7,
+            storage_dir=work, buckets=64, nbits_per_bucket=1 << 15, k=7,
         )
         seen = urls.limit(400).select("url")
         bloom.add_df(spark, seen)
         snap = wo(tmp_path / "snap")
-        bloom.save(snap, spark=spark)
+        sc = spark.sparkContext
+        sc.setJobGroup("bloom-snapshot", "PartitionedBloomSeen.save")
+        try:
+            bloom.save(snap, spark=spark)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup("bloom-snapshot")
+        assert len(jobs) == 1, jobs
+        tasks = sum(
+            tracker.getStageInfo(st).numTasks
+            for st in tracker.getJobInfo(jobs[0]).stageIds
+        )
+        assert tasks <= sc.defaultParallelism, tasks
+        work_io, snap_io = fsio.get_io(work), fsio.get_io(snap)
+        assert work_io.glob(work, "bucket_*.v*.npy") == []
+        bases = [snap_io.basename(p) for p in snap_io.glob(snap, "bucket_*.npy")]
+        assert bases and all(".g1." in nm for nm in bases)
+        assert bases == [
+            work_io.basename(p) for p in work_io.glob(work, "bucket_*.npy")
+        ]
 
         restored = PartitionedBloomSeen.load(
             snap, storage_dir=str(tmp_path / "work2")

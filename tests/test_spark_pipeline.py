@@ -198,6 +198,25 @@ class TestCrawlVsSimulator:
         )
 
 
+def test_simulator_robots_denied_links_are_counted_leaves():
+    """A robots-denied link bumps the filtered_robots counter, and the
+    crawl equals the robots-free crawl minus the denied Blocked_ urls
+    (they are leaves: no corpus row, no out-links)."""
+    seeds = [synth.page_url(i) for i in (275, 1165, 1735, 1643)]
+    sim = simulate_crawl(2000, seeds)
+    assert sum(r["filtered_robots"] for r in sim["rounds"]) > 0
+
+    free = simulate_crawl(2000, seeds, robots_txt="")
+
+    def pages(s, keep=lambda u: True):
+        return {
+            u: (p["last_crawl_status"], p["depth"])
+            for u, p in s["pages"].items() if keep(u)
+        }
+
+    assert pages(sim) == pages(free, lambda u: "/wiki/Blocked_" not in u)
+
+
 class TestLinkGraph:
     """The full discovered edge relation (ADVICE r4 #1) and its
     incremental in-degree state (VERDICT r4 #4)."""

@@ -163,6 +163,9 @@ _SHARD_CACHE_MAX = 256
 
 
 _GEN_RE = re.compile(r"\.g(\d+)\.npy$")
+# bucket_{b}.npy (legacy base) | bucket_{b}.g{gen}.npy (base) |
+# bucket_{b}.v{version}.a{attempt}.npy (delta)
+_SHARD_RE = re.compile(r"^bucket_(\d+)(?:\.g\d+|(\.v.+))?\.npy$")
 
 
 def _base_gen(name: str) -> int:
@@ -170,6 +173,19 @@ def _base_gen(name: str) -> int:
     ``bucket_3.g7.npy`` → 7."""
     m = _GEN_RE.search(name)
     return int(m.group(1)) if m else 0
+
+
+def _shard_files_by_bucket(names) -> dict[int, tuple[list[str], list[str]]]:
+    """One directory listing's file names → ``{bucket: (bases, deltas)}``.
+    Names that are not shard files (meta, staging tmp files) are
+    skipped."""
+    out: dict[int, tuple[list[str], list[str]]] = {}
+    for nm in names:
+        m = _SHARD_RE.match(nm)
+        if m is not None:
+            bases, deltas = out.setdefault(int(m.group(1)), ([], []))
+            (deltas if m.group(2) else bases).append(nm)
+    return out
 
 
 def _best_base_path(io_, storage_dir: str, bucket: int) -> str | None:
@@ -256,17 +272,20 @@ class PartitionedBloomSeen:
       bit would be a Bloom FALSE NEGATIVE, which drop_seen's fast path
       treats as exact (VERDICT r2 "What's wrong" #2). The driver moves
       zero bitmap bytes.
-    * compaction: ``compact(spark)`` folds each bucket's deltas into its
-      base file (distributed: one task per bucket, rename-base-then-
-      delete-deltas ordering keeps concurrent probes correct), called at
-      every durable checkpoint so the delta count stays O(rounds since
-      last snapshot).
+    * compaction: ``compact(spark)`` folds each bucket's deltas into a
+      new generation base file in one Spark job of
+      min(buckets, defaultParallelism) tasks, each task folding its share
+      of the buckets from a single listing of the working dir; the
+      write-base-then-delete-deltas ordering keeps concurrent probes
+      correct.
     * probe: an Arrow-batched pandas UDF loads, per batch, only the
       shards its rows hash into, through a per-worker cache — no global
       broadcast. Callers that repartition candidates by the same bucket
       key get one shard per task (the fully co-located layout); without
       it a task touches at most min(batch buckets, P) shards.
-    * checkpoint: the shard directory is copied per round; ``load``
+    * checkpoint: ``save(path, spark=...)`` compacts and writes every
+      bucket's newest base to the snapshot in that same single job, so
+      the delta count stays O(rounds since last snapshot); ``load``
       re-opens a snapshot into a fresh working dir so resumed crawls
       never mutate checkpoint artifacts.
 
@@ -355,45 +374,57 @@ class PartitionedBloomSeen:
 
     def compact(self, spark: SparkSession) -> None:
         """Fold every bucket's delta files into a NEW generation-numbered
-        base file. Distributed (one task per bucket — bitmap bytes never
-        transit the driver); the rename-free write-base-then-delete
-        ordering keeps concurrent probes correct on POSIX *and* object
-        stores (see _read_shard_files)."""
+        base file, in one Spark job of min(buckets, defaultParallelism)
+        tasks (bitmap bytes never transit the driver); the rename-free
+        write-base-then-delete ordering keeps concurrent probes correct
+        on POSIX *and* object stores (see _read_shard_files)."""
+        self._fold_job(spark, snapshot_dir=None)
+
+    def _fold_job(self, spark: SparkSession, snapshot_dir: str | None) -> None:
+        """The one distributed job behind ``compact`` and ``save``.
+
+        Task count is the cluster's core count, not the bucket count:
+        each Python task costs a fixed scheduling overhead far above the
+        work of folding a few small shards. Each task lists the working
+        dir once (one LIST call per task, not three per bucket) and, per
+        bucket of its share, folds the deltas into base generation
+        gen+1 — written before the deltas and the superseded bases are
+        removed — and then, with ``snapshot_dir``, writes the bucket's
+        newest base there. A retried task re-lists and finds either the
+        deltas again or the finished base, so every bucket still ends as
+        one newest base in the snapshot."""
         d, nwords = self.storage_dir, self.nbits >> 6
 
         def fold(buckets_iter):
             io_ = fsio.get_io(d)
-            n = 0
+            s_io = fsio.get_io(snapshot_dir) if snapshot_dir is not None else None
+            files = _shard_files_by_bucket(io_.listdir(d))
             for bucket in buckets_iter:
-                deltas = io_.glob(d, f"bucket_{bucket}.v*.npy")
-                if not deltas:
+                bases, deltas = files.get(bucket, ([], []))
+                best = max(bases, key=_base_gen, default=None)
+                if deltas:
+                    bm = np.zeros(nwords, dtype=np.uint64)
+                    if best is not None:
+                        bm |= _np_from_bytes(io_.read_bytes(io_.join(d, best)))
+                    for nm in deltas:
+                        bm |= _np_from_bytes(io_.read_bytes(io_.join(d, nm)))
+                    gen = _base_gen(best) + 1 if best is not None else 1
+                    best = f"bucket_{bucket}.g{gen}.npy"
+                    data = _np_to_bytes(bm)
+                    io_.write_bytes(io_.join(d, best), data)  # commit point
+                    for nm in deltas + bases:  # only now are they redundant
+                        io_.remove(io_.join(d, nm))
+                elif best is not None and s_io is not None:
+                    data = io_.read_bytes(io_.join(d, best))
+                else:
                     continue
-                old_bases = io_.glob(d, f"bucket_{bucket}.npy") + io_.glob(
-                    d, f"bucket_{bucket}.g*.npy"
-                )
-                max_gen = max(
-                    (_base_gen(io_.basename(p)) for p in old_bases), default=0
-                )
-                bm = np.zeros(nwords, dtype=np.uint64)
-                if old_bases:
-                    best = max(
-                        old_bases, key=lambda p: _base_gen(io_.basename(p))
-                    )
-                    bm |= _np_from_bytes(io_.read_bytes(best))
-                for p in deltas:
-                    bm |= _np_from_bytes(io_.read_bytes(p))
-                new_base = io_.join(d, f"bucket_{bucket}.g{max_gen + 1}.npy")
-                io_.write_bytes(new_base, _np_to_bytes(bm))  # commit point
-                for p in deltas:  # only now are the deltas redundant
-                    io_.remove(p)
-                for p in old_bases:  # superseded generations
-                    io_.remove(p)
-                n += 1
-            yield n
+                if s_io is not None:
+                    s_io.write_bytes(s_io.join(snapshot_dir, best), data)
 
         spark.sparkContext.parallelize(
-            range(self.buckets), min(self.buckets, 32)
-        ).mapPartitions(fold).sum()
+            range(self.buckets),
+            min(self.buckets, spark.sparkContext.defaultParallelism),
+        ).foreachPartition(fold)
         self.version += 1  # cache-bust probes onto the compacted bases
 
     # --- probe -------------------------------------------------------------
@@ -423,51 +454,25 @@ class PartitionedBloomSeen:
     def save(self, path: str, spark: SparkSession | None = None) -> None:
         """Snapshot shard files + metadata into directory ``path``.
 
-        With ``spark``, deltas are first compacted into the bases
-        (distributed) so the snapshot is base-files-only; without it the
-        outstanding deltas are copied verbatim (driver-side fallback)."""
-        if spark is not None:
-            self.compact(spark)
-        src_io = fsio.get_io(self.storage_dir)
+        With ``spark``, one distributed job (see ``_fold_job``) compacts
+        the deltas and writes each bucket's newest base, so the snapshot
+        is one ``bucket_{b}.g{gen}.npy`` per touched bucket and no bitmap
+        byte transits the driver — at a 10^10-URL frontier the filter is
+        ~10 GiB. Without it every shard file, deltas included, is copied
+        verbatim through the driver."""
         dst_io = fsio.get_io(path)
         dst_io.makedirs(path)
         buf = _io.BytesIO()
         np.savez(buf, buckets=self.buckets, nbits=self.nbits, k=self.k)
         dst_io.write_bytes(dst_io.join(path, self.META), buf.getvalue())
-        names = [
-            src_io.basename(p)
-            for p in src_io.glob(self.storage_dir, "bucket_*.npy")
-        ]
-        if spark is not None and names:
-            # distributed snapshot copy (one task per shard batch): at a
-            # 10^10-URL frontier the filter is ~10 GiB of bitmap — routing
-            # every byte through the driver (the old loop) makes the
-            # driver NIC the checkpoint bottleneck. Executors read their
-            # shard from the shared working dir and PUT it to the
-            # snapshot; the driver only writes the tiny meta blob.
-            src_dir, dst_dir = self.storage_dir, path
-
-            def copy_shards(names_iter):
-                s_io = fsio.get_io(src_dir)
-                d_io = fsio.get_io(dst_dir)
-                n = 0
-                for nm in names_iter:
-                    d_io.write_bytes(
-                        d_io.join(dst_dir, nm),
-                        s_io.read_bytes(s_io.join(src_dir, nm)),
-                    )
-                    n += 1
-                yield n
-
-            spark.sparkContext.parallelize(
-                names, min(len(names), 32)
-            ).mapPartitions(copy_shards).sum()
-        else:
-            for nm in names:
-                dst_io.write_bytes(
-                    dst_io.join(path, nm),
-                    src_io.read_bytes(src_io.join(self.storage_dir, nm)),
-                )
+        if spark is not None:
+            self._fold_job(spark, snapshot_dir=path)
+            return
+        src_io = fsio.get_io(self.storage_dir)
+        for src in src_io.glob(self.storage_dir, "bucket_*.npy"):
+            dst_io.write_bytes(
+                dst_io.join(path, src_io.basename(src)), src_io.read_bytes(src)
+            )
 
     @classmethod
     def load(cls, path: str, storage_dir: str | None = None) -> "PartitionedBloomSeen":

@@ -163,7 +163,10 @@ def simulate_crawl(
             if reason is None:
                 passed.append(c)
             else:
-                counters[f"filtered_{reason}"] += 1
+                # the robots_txt reason's counter is filtered_robots, as in
+                # the engine's metrics row (frontier.run_round)
+                key = "robots" if reason == "robots_txt" else reason
+                counters[f"filtered_{key}"] += 1
 
         # D2 claim: first wins, deterministic (source_page_url, in_page_seq)
         by_url: dict[str, dict] = {}

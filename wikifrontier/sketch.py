@@ -307,10 +307,14 @@ def kmv_sketch(df: DataFrame, value: str, k: int = KMV_K) -> DataFrame:
     """Bottom-k distinct md5 hashes of ``value`` → one row holding the
     sorted hash array. distinct → sort-limit is Spark's
     TakeOrderedAndProject: per-partition bottom-k, merged at the driver
-    — O(k) per partition, never a global sort."""
+    — O(k) per partition, never a global sort. The ``sk`` column's
+    metadata records the build ``k`` (``kmv_k``) for ``kmv_set_ops``'s
+    check."""
     h = df.select(F.md5(F.col(value).cast("string")).alias("h")).distinct()
     bottom = h.orderBy("h").limit(k)
-    return bottom.agg(F.array_sort(F.collect_list("h")).alias("sk"))
+    return bottom.agg(
+        F.array_sort(F.collect_list("h")).alias("sk", metadata={"kmv_k": k})
+    )
 
 
 def _frac(h):
@@ -320,7 +324,10 @@ def _frac(h):
 
 def kmv_estimate(sk, k: int = KMV_K):
     """Distinct-count estimate from a sorted bottom-k array column: exact
-    size when the sketch is not full, else (k-1)/frac(kth)."""
+    size when the sketch is not full, else (k-1)/frac(kth). ``k`` must not
+    exceed the sketch's build k: a full sketch holds only that many
+    hashes, so a larger k reads it as a not-full one and returns its
+    size."""
     return F.when(F.size(sk) < k, F.size(sk).cast("double")).otherwise(
         F.lit(float(k - 1)) / _frac(F.element_at(sk, k))
     )
@@ -337,7 +344,16 @@ def kmv_set_ops(a: DataFrame, b: DataFrame, k: int = KMV_K) -> DataFrame:
     union sketch is not full every member is known exactly and the
     estimates collapse to exact counts. All array ops are over ≤k
     elements on a single row — driver-free, broadcast-size state.
+
+    Raises ValueError when ``k`` exceeds the build k a ``kmv_sketch``
+    frame records (a smaller k is a valid bottom-k of the same set).
     """
+    for name, sketch_df in (("a", a), ("b", b)):
+        built = sketch_df.schema["sk"].metadata.get("kmv_k")
+        if built is not None and k > built:
+            raise ValueError(
+                f"kmv_set_ops k={k} exceeds sketch {name}'s build k={built}"
+            )
     j = (
         a.select(F.col("sk").alias("ska"))
         .crossJoin(b.select(F.col("sk").alias("skb")))
