@@ -3960,7 +3960,9 @@ GROUP BY doc_id
 """
 
 
-def _trustrank_sql() -> str:
+def _trustrank_with() -> tuple[str, str]:
+    """The trustrank chain shared by the q127, q138 and q139 oracles: its
+    WITH body (no final SELECT) and the name of its last iteration CTE."""
     from wikifrontier.linkgraph import PAGERANK_DAMPING, TRUSTRANK_ITERATIONS
 
     d = f"CAST({PAGERANK_DAMPING} AS DOUBLE)"
@@ -3984,7 +3986,7 @@ it{k} AS (
 )""")
         prev = f"it{k}"
     its = ",".join(iters)
-    return f"""
+    body = f"""
 WITH nn AS (SELECT count(*) AS n FROM documents),
 edges AS (
   SELECT doc_id AS src, (doc_id + 1) % nn.n AS dst FROM documents, nn
@@ -4003,7 +4005,14 @@ trust AS (
   FROM nodes CROSS JOIN sn
 ),
 it0 AS (SELECT id, t AS tr FROM trust),{its}
-SELECT id AS doc_id, round(tr, 8) AS trustrank FROM {prev}
+"""
+    return body, f"it{TRUSTRANK_ITERATIONS}"
+
+
+def _trustrank_sql() -> str:
+    tr_body, tr_last = _trustrank_with()
+    return f"""{tr_body}
+SELECT id AS doc_id, round(tr, 8) AS trustrank FROM {tr_last}
 """
 
 
@@ -4388,10 +4397,7 @@ def _spam_composite_sql() -> str:
     banned = " OR ".join(f"u.url LIKE '%{w}%'" for w in FL.URLQ_BANNED_WORDS)
     # trustrank chain reused verbatim (same constants as q127), plus the
     # url-quality keep rule and the reciprocity fraction, joined on doc_id
-    tr_chain = _trustrank_sql()
-    # strip the final SELECT of the trustrank oracle; keep its WITH body
-    tr_body = tr_chain[: tr_chain.rindex("SELECT id AS doc_id")]
-    tr_last = "it3"
+    tr_body, tr_last = _trustrank_with()
     return f"""{tr_body}
 , uq AS (
   SELECT CAST(regexp_extract(u.url, 'Doc_([0-9]+)', 1) AS BIGINT) AS doc_id,
@@ -4454,13 +4460,12 @@ def _host_trust_sql() -> str:
     """q139 oracle: the q127 trustrank chain + host assignment + an
     id-ordered list_reduce fold (the same left-fold arithmetic as the
     Spark side — never SUM over an unordered set)."""
-    tr_chain = _trustrank_sql()
-    tr_body = tr_chain[: tr_chain.rindex("SELECT id AS doc_id")]
+    tr_body, tr_last = _trustrank_with()
     return f"""{tr_body}
 , ha AS (
-  SELECT it3.id, it3.tr,
-         'h' || CAST(it3.id % {Q.TRUST_HOST_MOD} AS VARCHAR) || '.org' AS host
-  FROM it3
+  SELECT {tr_last}.id, {tr_last}.tr,
+         'h' || CAST({tr_last}.id % {Q.TRUST_HOST_MOD} AS VARCHAR) || '.org' AS host
+  FROM {tr_last}
 ),
 per AS (
   SELECT host,

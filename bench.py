@@ -184,7 +184,7 @@ def bench_crawl(spark, n_pages: int, trials: int = CRAWL_TRIALS) -> dict:
     ws = run_crawl(spark, warm_corpus, [synth.page_url(0)], cfg)
     ws.pages.count()
     warm_corpus.unpersist()
-    if hasattr(ws.bloom, "cleanup"):
+    if ws.bloom is not None:
         ws.bloom.cleanup()
 
     wall, cpu_ms, crawled, state = [], [], 0, None
@@ -195,13 +195,13 @@ def bench_crawl(spark, n_pages: int, trials: int = CRAWL_TRIALS) -> dict:
         wall.append(elapsed)
         if cpu0 is not None and cpu1 is not None:
             cpu_ms.append(cpu1 - cpu0)
-        if state is not None and hasattr(state.bloom, "cleanup"):
+        if state is not None and state.bloom is not None:
             state.bloom.cleanup()
         state = st
     parsed = state.page_content.count()
     edges = state.links.count()
     corpus.unpersist()
-    if hasattr(state.bloom, "cleanup"):
+    if state.bloom is not None:
         state.bloom.cleanup()
     best = min(wall)
     out = {
@@ -252,7 +252,7 @@ def bench_crawl_checkpointed(
         crawled = state.pages.count()
         wall.append(time.time() - t0)
         shutil.rmtree(ckpt, ignore_errors=True)
-        if hasattr(state.bloom, "cleanup"):
+        if state.bloom is not None:
             state.bloom.cleanup()
     corpus.unpersist()
     best = min(wall)

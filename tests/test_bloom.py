@@ -1,13 +1,14 @@
-"""BloomSeen / PartitionedBloomSeen: no false negatives, useful
-selectivity, persistence, and pre-filtered drop_seen equivalence with the
-plain anti-join."""
+"""PartitionedBloomSeen, the engine's one URL-seen filter: no false
+negatives, useful selectivity, retry-safe deltas, persistence, and
+pre-filtered drop_seen equivalence with the plain anti-join."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from wikifrontier.seen import BloomSeen, PartitionedBloomSeen, drop_seen
+from wikifrontier.frontier import CrawlConfig
+from wikifrontier.seen import PartitionedBloomSeen, drop_seen
 
 
 @pytest.fixture(scope="module")
@@ -17,35 +18,9 @@ def urls(spark):
     )
 
 
-def test_no_false_negatives_and_low_fp(spark, urls):
-    bloom = BloomSeen(nbits=1 << 18, k=7)
-    seen = urls.filter(F.col("url").substr(-1, 1).isin("0", "2", "4", "6", "8"))
-    bloom.add_df(spark, seen)
-
-    flagged = urls.withColumn("m", bloom.maybe_seen_col(spark, F.col("url")))
-    # every seen url must flag as maybe-seen
-    misses = flagged.join(seen, "url").filter(~F.col("m")).count()
-    assert misses == 0
-    # unseen urls mostly pass the fast path (fp rate well under 5% here)
-    unseen_total = flagged.join(seen, "url", "left_anti")
-    fp = unseen_total.filter(F.col("m")).count()
-    assert fp / unseen_total.count() < 0.05
-
-
-def test_drop_seen_with_bloom_equivalent(spark, urls):
-    bloom = BloomSeen(nbits=1 << 18, k=7)
-    seen = urls.filter(F.xxhash64("url") % 3 == 0).select("url")
-    bloom.add_df(spark, seen)
-    cands = urls.withColumn("depth", F.lit(1))
-
-    plain = {r["url"] for r in drop_seen(cands, seen).collect()}
-    pre = {r["url"] for r in drop_seen(cands, seen, bloom, spark).collect()}
-    assert plain == pre
-
-
 class TestPartitionedBloom:
-    """The sharded scale-path filter: same semantic guarantees as the
-    single bitmap, with zero bitmap bytes through the driver."""
+    """The sharded filter: zero false negatives and a low false-positive
+    rate, with zero bitmap bytes through the driver."""
 
     def test_no_false_negatives_and_low_fp(self, spark, urls, tmp_path):
         bloom = PartitionedBloomSeen(
@@ -114,7 +89,7 @@ class TestPartitionedBloom:
         bloom.add_df(spark, urls.limit(300))  # superset — idempotent OR
 
         snap = str(tmp_path / "snap")
-        bloom.save(snap)
+        bloom.save(snap, spark=spark)
         loaded = PartitionedBloomSeen.load(snap)
         assert (loaded.buckets, loaded.nbits, loaded.k) == (4, 1 << 14, 5)
         # the re-opened snapshot still flags everything that was added
@@ -128,14 +103,14 @@ class TestPartitionedBloom:
         assert loaded.storage_dir != snap and bloom2.storage_dir != snap
 
 
-def test_incremental_and_persistence(spark, urls, tmp_path):
-    bloom = BloomSeen(nbits=1 << 16, k=5)
-    first = urls.limit(100)
-    bloom.add_df(spark, first)
-    bloom.add_df(spark, urls.limit(300))  # superset — idempotent OR
+@pytest.mark.parametrize("buckets", [0, -4, 6])
+def test_bucket_count_not_power_of_two_rejected(buckets):
+    # raised before the constructor creates its working dir
+    with pytest.raises(ValueError, match="buckets"):
+        PartitionedBloomSeen(buckets=buckets)
 
-    path = str(tmp_path / "bloom.npz")
-    bloom.save(path)
-    loaded = BloomSeen.load(path)
-    assert (loaded.bitmap == bloom.bitmap).all()
-    assert loaded.nbits == bloom.nbits and loaded.k == bloom.k
+
+@pytest.mark.parametrize("buckets", [0, None])
+def test_config_bucket_count_below_one_rejected(buckets):
+    with pytest.raises(ValueError, match="bloom_buckets"):
+        CrawlConfig(bloom_buckets=buckets)

@@ -198,6 +198,15 @@ class TestCrawlVsSimulator:
         )
 
 
+def test_executor_count_is_configured_instances(spark):
+    """The broadcast gate divides by the configured executor count; the
+    local[k] test session configures none, so the divisor is 1."""
+    from wikifrontier.frontier import _executor_count
+
+    assert spark.conf.get("spark.executor.instances", None) is None
+    assert _executor_count(spark) == 1
+
+
 def test_simulator_robots_denied_links_are_counted_leaves():
     """A robots-denied link bumps the filtered_robots counter, and the
     crawl equals the robots-free crawl minus the denied Blocked_ urls
@@ -303,9 +312,13 @@ class TestCheckpointResume:
     def test_load_tolerates_missing_side_tables(self, spark, corpus, tmp_path):
         """ADVICE r2: a snapshot written before a state table existed (here
         simulated by deleting its dir) must load with that table empty, not
-        raise — schema growth cannot brick existing checkpoints."""
+        raise — schema growth cannot brick existing checkpoints. Likewise a
+        head holding only the legacy single-bitmap ``bloom.npz`` loads with
+        no filter, and the resumed crawl rebuilds it from ``seen``."""
         import os
         import shutil
+
+        import numpy as np
 
         from wikifrontier import state as state_io
 
@@ -315,12 +328,28 @@ class TestCheckpointResume:
         )
         run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], cfg)
         n = state_io.latest_round(ckpt)
+        head = os.path.join(ckpt, f"round={n}")
         for table in ("retries", "invalid_rows"):
-            shutil.rmtree(os.path.join(ckpt, f"round={n}", table))
+            shutil.rmtree(os.path.join(head, table))
+        # a legacy single-bitmap head: bloom.npz in place of bloom_shards/
+        shutil.rmtree(os.path.join(head, "bloom_shards"))
+        np.savez(
+            os.path.join(head, "bloom.npz"),
+            bitmap=np.zeros(1 << 10, dtype=np.uint64), nbits=1 << 16, k=7,
+        )
         st = state_io.load_checkpoint(spark, ckpt)
         assert st is not None and st.round == n
         assert st.retries.count() == 0 and st.invalid_rows.count() == 0
         assert st.pages.count() > 0  # the surviving tables still load
+        assert st.bloom is None
+
+        cfg_resume = CrawlConfig(
+            robots_txt=synth.ROBOTS_TXT, max_rounds=10, checkpoint_dir=ckpt
+        )
+        state = run_crawl(
+            spark, corpus, [synth.page_url(synth.SEED_ID)], cfg_resume, resume=True
+        )
+        _assert_state_matches(state, simulate_crawl(N, max_rounds=10))
 
 
 class TestRecrawl:
@@ -444,26 +473,6 @@ class TestStatusRetryDlq:
         assert state.invalid_rows.columns == [
             "url", "depth", "source_page_url", "reject_reason", "rejected_round"
         ]
-
-
-class TestInMemoryCompaction:
-    def test_compact_every_preserves_state(self, spark, corpus):
-        """compact_every folds the event log into localCheckpointed bases
-        mid-crawl; the final pages/page_content/links tables must be
-        row-identical to the uncompacted crawl (same combine algebra as
-        the durable checkpoint, which TestCheckpointResume pins)."""
-        from dataclasses import replace
-
-        cfg = CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=6)
-        plain = run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], cfg)
-        compacted = run_crawl(
-            spark, corpus, [synth.page_url(synth.SEED_ID)],
-            replace(cfg, compact_every=2),
-        )
-        for table in ("pages", "page_content", "links"):
-            a = sorted(map(tuple, getattr(plain, table).collect()))
-            b = sorted(map(tuple, getattr(compacted, table).collect()))
-            assert a == b, table
 
 
 class TestCheckpointEvery:

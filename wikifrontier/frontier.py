@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from wikifrontier import filters as flt
 from wikifrontier import schemas
 from wikifrontier.politeness import cap_per_host, pop_frontier
-from wikifrontier.seen import BloomSeen, claim_first_wins, drop_seen
+from wikifrontier.seen import PartitionedBloomSeen, claim_first_wins, drop_seen
 from wikifrontier.udfs import parse_page_udf
 
 RECRAWL_INTERVAL_SECONDS = 691_200  # 8 days — crawler_prod.yml:26
@@ -78,7 +78,8 @@ class CrawlConfig:
     # it per-round state rests on localCheckpoint blocks whose lineage is
     # truncated — an executor loss makes them unrecoverable and the
     # accumulated tables grow as O(rounds) union chains. The checkpoint
-    # doubles as event-log compaction, bounding both.
+    # doubles as event-log compaction — the engine's only one — bounding
+    # both; a long crawl whose event log grows too deep should set it.
     checkpoint_dir: str | None = None
     # write the durable snapshot every K rounds (1 = every round). Larger
     # K amortizes the per-round fixed cost; recovery replays at most K-1
@@ -100,34 +101,16 @@ class CrawlConfig:
     # checkpoint — while a delta writes O(round) rows. 1 = always full
     # (the pre-v3 layout).
     checkpoint_full_every: int = 8
-    # in-MEMORY event-log compaction every K rounds (None = off): fold the
-    # accumulated page/content events into localCheckpointed base tables.
-    # Matters for LONG crawls without a durable checkpoint_dir whose state
-    # is re-read every round — with enable_recrawl the rescheduler scans
-    # state.pages at round start, so an uncompacted event log makes round
-    # r pay an O(r)-deep fold (O(rounds²) overall). The crossover is real
-    # but far out: at ≤10 rounds the lazy fold wins (measured 53 s vs
-    # 95 s at sf0.1 — each compaction eagerly materializes four state
-    # tables), so leave this off except for perpetual-recrawl round
-    # counts. Durable checkpoints already compact; this is the lighter
-    # knob when durability isn't needed — and it is a NO-OP whenever
-    # checkpoint_dir is set, because a delta snapshot persists only the
-    # events still in the log: folding them away between snapshots would
-    # drop rows from the durable chain. Fold associativity is the same
-    # combine_pages/_latest_content algebra the checkpoint path uses.
-    compact_every: int | None = None
     collect_metrics: bool = True
     # Bloom pre-filter over the seen set (north_rule). None disables; the
     # default 2^22 bits ≈ 512 KiB holds ~400k URLs at <1% fp — size it to
     # ~10 bits/URL for the target frontier (10^10 URLs → ~12 GiB total).
     bloom_bits: int | None = 1 << 22
-    # shard count of the partitioned filter (power of two). The default
-    # keeps bitmap bytes off the driver entirely (seen.
-    # PartitionedBloomSeen) and bounds add_df's shuffle parallelism, so
-    # size it >= the executor-core count; 0/None selects the legacy
-    # single driver bitmap — viable only while bloom_bits stays
-    # broadcast-small.
-    bloom_buckets: int | None = 64
+    # shard count of the partitioned filter (seen.PartitionedBloomSeen;
+    # a power of two >= 1). Bitmap bytes never reach the driver, and the
+    # count bounds add_df's shuffle parallelism, so size it >= the
+    # executor-core count.
+    bloom_buckets: int = 64
     # shard-file directory of the partitioned filter. REQUIRED on a
     # multi-node cluster (a DFS/NFS/object-store mount visible to every
     # executor — the same contract as any Spark checkpoint location);
@@ -197,6 +180,11 @@ class CrawlConfig:
     corpus_buckets: int | None = None
 
     def __post_init__(self):
+        if self.bloom_buckets is None or self.bloom_buckets < 1:
+            raise ValueError(
+                f"CrawlConfig.bloom_buckets must be >= 1, got {self.bloom_buckets!r}"
+                " (bloom_bits=None turns the Bloom filter off)"
+            )
         if self.crawl_epoch is None:
             object.__setattr__(
                 self,
@@ -238,7 +226,7 @@ class CrawlState:
     # were computed at; refreshed every CrawlConfig.score_refresh_every
     rank_scores: DataFrame | None = None
     rank_scored_round: int = -1
-    bloom: object | None = None  # BloomSeen | PartitionedBloomSeen
+    bloom: PartitionedBloomSeen | None = None
     # True until a durable checkpoint backs the base tables: lets the
     # views skip the full-outer join against a provably-empty base (one
     # whole shuffle+join off the hot fold on never-checkpointed crawls)
@@ -485,29 +473,15 @@ def bucket_corpus(corpus: DataFrame, buckets: int) -> DataFrame:
 
 
 def _executor_count(spark: SparkSession) -> int:
-    """Executor JVM count for the broadcast-cost gate — PUBLIC API only
-    (ADVICE r3 #4 replaced the private `_jsc...getExecutorMemoryStatus()`
-    call): `statusTracker().getExecutorInfos()` lists driver + executors.
-
-    Before executors register (dynamic allocation warm-up) the tracker
-    reports only the driver; rather than letting the divisor collapse to
-    1 — which would let a large batch broadcast cluster-wide — clamp to
-    the count implied by the configured `spark.executor.instances` when
-    that is set. Any tracker failure degrades to the conservative
-    configured value (or 1 in local mode, where broadcast is correct)."""
-    configured = 0
+    """Executor count for the broadcast-cost gate: the configured
+    `spark.executor.instances`, or 1 when unset (local mode, where
+    broadcast is correct). It is the configured count, not the live one —
+    PySpark's public StatusTracker reports jobs and stages only."""
     try:
         configured = int(spark.conf.get("spark.executor.instances", "0") or 0)
-    except Exception:
-        pass
-    try:
-        # local[*] reports exactly one entry (the driver doubles as the
-        # executor) → count 1; cluster mode reports driver + N → N.
-        registered = len(spark.sparkContext.statusTracker().getExecutorInfos())
-        live = max(1, registered - 1) if registered > 1 else 1
-    except Exception:
-        live = 1
-    return max(live, configured, 1)
+    except ValueError:
+        configured = 0
+    return max(configured, 1)
 
 
 def _fetch_join(batch: DataFrame, corpus: DataFrame, use_broadcast: bool):
@@ -1009,38 +983,6 @@ def run_round(
             keep_last=cfg.checkpoint_keep_last,
             full_every=cfg.checkpoint_full_every,
         )
-    elif (
-        cfg.compact_every is not None
-        # never fold the event log away while a durable checkpoint dir is
-        # active: a later DELTA snapshot persists only the events still in
-        # the log, so an in-memory fold between snapshots would silently
-        # drop those rows from the durable chain. Durable checkpoints
-        # already compact on their own cadence.
-        and cfg.checkpoint_dir is None
-        and (rnd + 1) % max(cfg.compact_every, 1) == 0
-        and (new_state.page_events is not None or new_state.content_events is not None)
-    ):
-        # in-memory compaction: materialize the folded views as the new
-        # bases and drop the event log — identical algebra to the durable
-        # checkpoint's compaction, minus the parquet round-trip
-        new_state = CrawlState(
-            round=new_state.round,
-            pending=new_state.pending,
-            seen=new_state.seen.localCheckpoint(eager=True),
-            links=new_state.links.localCheckpoint(eager=True),
-            metrics=new_state.metrics,
-            pages_base=new_state.pages.localCheckpoint(eager=True),
-            content_base=new_state.page_content.localCheckpoint(eager=True),
-            invalid_rows=new_state.invalid_rows,
-            retries=new_state.retries,
-            link_graph=new_state.link_graph.localCheckpoint(eager=True),
-            link_scores=new_state.folded_scores().localCheckpoint(eager=True),
-            rank_scores=new_state.rank_scores,
-            rank_scored_round=new_state.rank_scored_round,
-            bloom=new_state.bloom,
-            bases_empty=False,
-            pending_rows_hint=new_state.pending_rows_hint,
-        )
 
     if cfg.collect_metrics:
         candidates.unpersist()
@@ -1048,31 +990,25 @@ def run_round(
     return new_state, counters
 
 
-def _new_bloom(cfg: CrawlConfig):
-    """Build the configured bloom tier: partitioned shards by default,
-    the legacy driver bitmap when bloom_buckets is falsy."""
-    from wikifrontier.seen import PartitionedBloomSeen
-
-    if cfg.bloom_buckets:
-        return PartitionedBloomSeen(
-            storage_dir=cfg.bloom_storage_dir,
-            buckets=cfg.bloom_buckets,
-            nbits_per_bucket=max(cfg.bloom_bits // cfg.bloom_buckets, 1 << 12),
-        )
-    return BloomSeen(nbits=cfg.bloom_bits)
+def _bloom_nbits_per_bucket(cfg: CrawlConfig) -> int:
+    return max(cfg.bloom_bits // cfg.bloom_buckets, 1 << 12)
 
 
-def _bloom_mismatch(bloom, cfg: CrawlConfig) -> bool:
+def _new_bloom(cfg: CrawlConfig) -> PartitionedBloomSeen:
+    return PartitionedBloomSeen(
+        storage_dir=cfg.bloom_storage_dir,
+        buckets=cfg.bloom_buckets,
+        nbits_per_bucket=_bloom_nbits_per_bucket(cfg),
+    )
+
+
+def _bloom_mismatch(bloom: PartitionedBloomSeen, cfg: CrawlConfig) -> bool:
     """True when a checkpoint-loaded filter disagrees with the configured
-    tier or sizing (it would silently cap the false-positive budget)."""
-    from wikifrontier.seen import PartitionedBloomSeen
-
-    if cfg.bloom_buckets:
-        return not isinstance(bloom, PartitionedBloomSeen) or (
-            bloom.buckets != cfg.bloom_buckets
-            or bloom.nbits != max(cfg.bloom_bits // cfg.bloom_buckets, 1 << 12)
-        )
-    return not isinstance(bloom, BloomSeen) or bloom.nbits != cfg.bloom_bits
+    sizing (it would silently cap the false-positive budget)."""
+    return (
+        bloom.buckets != cfg.bloom_buckets
+        or bloom.nbits != _bloom_nbits_per_bucket(cfg)
+    )
 
 
 def run_crawl(
@@ -1160,9 +1096,9 @@ def run_crawl(
         # bloom_storage_dir configured), remove it — the checkpoint copy
         # of the shards (written above) is the durable one, and every
         # returned round output is a localCheckpoint'd leaf that never
-        # re-reads the working shards. cleanup() is a no-op for
-        # caller-provided storage dirs.
-        if state.bloom is not None and getattr(state.bloom, "_owns_dir", False):
+        # re-reads the working shards. A caller-provided storage dir
+        # stays, and the returned state keeps its filter.
+        if state.bloom is not None and state.bloom._owns_dir:
             state.bloom.cleanup()
             state.bloom = None
     return state

@@ -359,9 +359,9 @@ def q40_crawl_recrawl(spark, sf_dir):
     cfg = frontier.CrawlConfig(
         max_depth=4, budget_per_round=None, per_host_cap=None, max_rounds=10,
         collect_metrics=False, enable_recrawl=True, recrawl_interval_s=3,
-        # compact_every stays OFF here: at 10 rounds the lazy event-log
-        # fold is cheaper than periodic materialization (measured 53 s vs
-        # 95 s at sf0.1); the knob pays off only at perpetual-crawl round
+        # no checkpoint_dir: at 10 rounds the lazy event-log fold is
+        # cheaper than periodic materialization (measured 53 s vs 95 s at
+        # sf0.1); compaction pays off only at perpetual-crawl round
         # counts where the O(rounds) fold depth dominates
     )
     state = frontier.run_crawl(spark, web_pages, [corpus_mod.doc_url(0)], cfg)

@@ -177,14 +177,9 @@ def write_checkpoint(
         "tables": sorted(written),
     }
     if state.bloom is not None:
-        from wikifrontier.seen import PartitionedBloomSeen
-
-        if isinstance(state.bloom, PartitionedBloomSeen):
-            # spark → one distributed job compacts the shard deltas and
-            # writes the snapshot's bases
-            state.bloom.save(io_.join(round_dir, "bloom_shards"), spark=spark)
-        else:
-            state.bloom.save(fsio.strip_scheme(io_.join(round_dir, "bloom.npz")))
+        # one distributed job compacts the shard deltas and writes the
+        # snapshot's bases
+        state.bloom.save(io_.join(round_dir, "bloom_shards"), spark=spark)
 
     # commit point: manifest presence marks the round complete
     io_.write_bytes(
@@ -196,11 +191,11 @@ def write_checkpoint(
     if delta:
         # only O(round) rows hit disk, so the in-memory state cannot be
         # re-backed by this snapshot alone. Instead: truncate the
-        # merge-view lineage in memory (same compaction algebra as the
-        # compact_every path), keep the append-only tables' lazy unions —
-        # their leaves are already localCheckpointed per round and the
-        # chain depth is bounded by full_every — and re-back only the
-        # fully-written live tables from parquet.
+        # merge-view lineage in memory (the full snapshot's compaction
+        # algebra, minus the parquet round-trip), keep the append-only
+        # tables' lazy unions — their leaves are already localCheckpointed
+        # per round and the chain depth is bounded by full_every — and
+        # re-back only the fully-written live tables from parquet.
         return CrawlState(
             round=state.round,
             pending=_reload("pending"),
@@ -265,9 +260,6 @@ def _trim_chain_member(io_, round_dir: str) -> None:
         p = io_.join(round_dir, entry)
         if io_.exists(p):
             io_.rmtree(p)
-    p = io_.join(round_dir, "bloom.npz")
-    if io_.exists(p):
-        io_.remove(p)
 
 
 def prune_checkpoints(ckpt_dir: str, keep_last: int, newest: int) -> list[int]:
@@ -385,17 +377,14 @@ def load_checkpoint(
     if ce_paths:
         content_base = combine_content(content_base, spark.read.parquet(*ce_paths))
 
+    # a head without bloom_shards/ (no filter, or a legacy single-bitmap
+    # bloom.npz) loads with bloom=None; run_crawl rebuilds it from seen
     shards_dir = io_.join(head_dir, "bloom_shards")
-    bloom_path = io_.join(head_dir, "bloom.npz")
     bloom = None
     if io_.exists(shards_dir):
         from wikifrontier.seen import PartitionedBloomSeen
 
         bloom = PartitionedBloomSeen.load(shards_dir, storage_dir=bloom_storage_dir)
-    elif io_.exists(bloom_path):
-        from wikifrontier.seen import BloomSeen
-
-        bloom = BloomSeen.load(fsio.strip_scheme(bloom_path))
     return CrawlState(
         round=n,
         pending=tables["pending"],
