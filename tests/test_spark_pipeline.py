@@ -19,6 +19,16 @@ def corpus(spark):
     return df
 
 
+DEFAULT_CFG = CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=10)
+
+
+@pytest.fixture(scope="module")
+def default_crawl(spark, corpus):
+    """The default unbudgeted crawl, shared read-only by every test that
+    inspects it. It drains after 5 rounds, well inside max_rounds."""
+    return run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], DEFAULT_CFG)
+
+
 def _assert_state_matches(state, sim):
     pages = {r["url"]: r.asDict() for r in state.pages.collect()}
     assert set(pages) == set(sim["pages"])
@@ -108,11 +118,8 @@ class TestCorpusGeneration:
 
 
 class TestCrawlVsSimulator:
-    def test_unbudgeted_bfs(self, spark, corpus):
-        cfg = CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=10)
-        state = run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], cfg)
-        sim = simulate_crawl(N, max_rounds=10)
-        _assert_state_matches(state, sim)
+    def test_unbudgeted_bfs(self, default_crawl):
+        _assert_state_matches(default_crawl, simulate_crawl(N, max_rounds=10))
 
     def test_budgeted_crawl(self, spark, corpus):
         cfg = CrawlConfig(robots_txt=synth.ROBOTS_TXT, budget_per_round=40, max_rounds=8)
@@ -171,31 +178,18 @@ class TestCrawlVsSimulator:
                 CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=1,
                             pop_strategy="priority", budget_per_round=10),
             )
+        with pytest.raises(ValueError, match="expected 'fifo' or 'scored'"):
+            run_crawl(
+                spark, corpus, [synth.page_url(synth.SEED_ID)],
+                CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=1,
+                            pop_strategy="pagerank", budget_per_round=10),
+            )
         with pytest.raises(ValueError, match="requires budget_per_round"):
             run_crawl(
                 spark, corpus, [synth.page_url(synth.SEED_ID)],
                 CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=1,
                             pop_strategy="scored"),
             )
-
-    def test_pagerank_pop_same_set(self, spark, corpus):
-        """pop_strategy='pagerank' (periodic full-graph refresh) reaches
-        the same exhaustive page set as FIFO."""
-        base = run_crawl(
-            spark, corpus, [synth.page_url(synth.SEED_ID)],
-            CrawlConfig(robots_txt=synth.ROBOTS_TXT, budget_per_round=40,
-                        max_rounds=12),
-        )
-        pr = run_crawl(
-            spark, corpus, [synth.page_url(synth.SEED_ID)],
-            CrawlConfig(robots_txt=synth.ROBOTS_TXT, budget_per_round=40,
-                        max_rounds=12, pop_strategy="pagerank",
-                        score_refresh_every=3),
-        )
-        assert (
-            {r["url"] for r in base.pages.select("url").collect()}
-            == {r["url"] for r in pr.pages.select("url").collect()}
-        )
 
 
 def test_executor_count_is_configured_instances(spark):
@@ -230,9 +224,8 @@ class TestLinkGraph:
     """The full discovered edge relation (ADVICE r4 #1) and its
     incremental in-degree state (VERDICT r4 #4)."""
 
-    def test_link_graph_is_distinct_superset_of_claim_tree(self, spark, corpus):
-        cfg = CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=10)
-        state = run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], cfg)
+    def test_link_graph_is_distinct_superset_of_claim_tree(self, default_crawl):
+        state = default_crawl
         edges = [
             (r["source_page_url"], r["url"]) for r in state.link_graph.collect()
         ]
@@ -243,11 +236,10 @@ class TestLinkGraph:
         assert claim_pairs <= set(edges)  # claim tree ⊆ full graph
         assert len(edges) > len(claim_pairs)  # multi-source edges exist
 
-    def test_incremental_fold_equals_one_shot_in_degrees(self, spark, corpus):
+    def test_incremental_fold_equals_one_shot_in_degrees(self, default_crawl):
         from wikifrontier.politeness import in_degrees
 
-        cfg = CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=10)
-        state = run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], cfg)
+        state = default_crawl
         folded = {
             r["url"]: r["in_degree"] for r in state.in_degrees.collect()
         }
@@ -353,7 +345,7 @@ class TestCheckpointResume:
 
 
 class TestRecrawl:
-    def test_recrawl_due_and_requeue(self, spark, corpus):
+    def test_recrawl_due_and_requeue(self, spark, corpus, default_crawl):
         """S7/A5: pages past next_crawl_at re-enter the frontier with
         link-graph depth (coalesce 0 for the seed), and a recrawl bumps
         total_crawl_attempts without changing the page set."""
@@ -361,8 +353,7 @@ class TestRecrawl:
 
         from wikifrontier.frontier import recrawl_due
 
-        cfg = CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=10)
-        state = run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], cfg)
+        cfg, state = DEFAULT_CFG, default_crawl
         n_pages = state.pages.count()
 
         # nothing is due before the 8-day horizon
@@ -421,23 +412,21 @@ class TestStatusRetryDlq:
         assert row[0]["failed_crawl_attempts"] == 0  # insert never counts
         assert row[0]["last_error_seen"].startswith("SKIPPED")
 
-    def test_error_taxonomy_deterministic(self, spark, corpus):
+    def test_error_taxonomy_deterministic(self, default_crawl):
         """FAILED pages carry one of the reference's 6 error classes,
         derived reproducibly from the url (crawler_types.py:8-40)."""
         import hashlib
 
         from wikifrontier.frontier import ERROR_TYPES
 
-        cfg = CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=10)
-        state = run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], cfg)
-        failed = state.pages.filter(F.col("last_crawl_status") == "FAILED").collect()
+        failed = default_crawl.pages.filter(F.col("last_crawl_status") == "FAILED").collect()
         assert failed  # Missing_ links guarantee misses
         for r in failed:
             nib = hashlib.sha256(r["url"].encode()).hexdigest()[0]
             want = ERROR_TYPES[int(nib, 16) % 6]
             assert r["last_error_seen"] == f"{want}: request failed", r["url"]
 
-    def test_fetch_retry_bounded(self, spark, corpus):
+    def test_fetch_retry_bounded(self, spark, corpus, default_crawl):
         """download_retry analogue: a missing url is re-fetched
         fetch_retries times, attempt counters accumulate, then the
         frontier drains (no infinite retry loop)."""
@@ -454,14 +443,11 @@ class TestStatusRetryDlq:
             assert r["failed_crawl_attempts"] == 2, r["url"]
         assert all(r["attempts"] == 3 for r in state.retries.collect())
         assert state.pending.isEmpty()
-        # retries must not disturb the SUCCESS page set
-        base = run_crawl(
-            spark, corpus, [synth.page_url(synth.SEED_ID)],
-            CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=16),
-        )
+        # retries must not disturb the SUCCESS page set (the default crawl
+        # drains in 5 rounds, so its max_rounds matches this one's 16)
         assert (
             state.pages.filter(F.col("last_crawl_status") == "SUCCESS").count()
-            == base.pages.filter(F.col("last_crawl_status") == "SUCCESS").count()
+            == default_crawl.pages.filter(F.col("last_crawl_status") == "SUCCESS").count()
         )
 
     def test_dlq_empty_for_wellformed_corpus(self, spark, corpus):

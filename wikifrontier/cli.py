@@ -228,7 +228,7 @@ def cmd_crawl(args) -> int:
 def cmd_linkrank(args) -> int:
     """Score the crawled link graph with linkgraph.pagerank; a production
     crawl feeds the result back into politeness.scored_pop as the priority
-    key (or runs pop_strategy='pagerank' for the in-loop refresh).
+    key (the crawl loop's own scored pop uses in-degree).
 
     Uses the checkpoint's `link_graph` table — the FULL discovered edge
     set (every distinct source→url pair, ADVICE r4 #1). The claim-tree

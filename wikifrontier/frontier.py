@@ -18,8 +18,9 @@ Scale design decisions (SURVEY.md §4.2):
   checkpointed. The alternative (full-outer-merge rewrite of every state
   table per round, as the first cut did) is O(total-crawled) per round —
   quadratic over a crawl and unusable at a 10^10-URL frontier.
-* metrics are DataFrame aggregates (accumulators are unreliable), computed
-  from cached per-round intermediates — reference A6.
+* metrics are DataFrame aggregates (accumulators are unreliable): one
+  read-only grouped count per round over the round's checkpointed leaves,
+  attributed in the reference's D1 → F → D2 order — reference A6.
 """
 
 from __future__ import annotations
@@ -38,6 +39,10 @@ from wikifrontier.seen import PartitionedBloomSeen, claim_first_wins, drop_seen
 from wikifrontier.udfs import parse_page_udf
 
 RECRAWL_INTERVAL_SECONDS = 691_200  # 8 days — crawler_prod.yml:26
+
+# popped rows up to which fetch_strategy="auto" broadcasts the batch
+# (divided by the executor count in run_round)
+BROADCAST_ROW_LIMIT = 4_000_000
 
 # the reference's 6-way fetch-exception taxonomy, in declaration order
 # (components/crawler/types/crawler_types.py:8-40)
@@ -144,14 +149,14 @@ class CrawlConfig:
     #   "broadcast" — always broadcast the popped url batch (fastest while
     #       the batch fits; the round-1 behavior);
     #   "bucketed"  — never broadcast: shuffle-hash join against a corpus
-    #       pre-partitioned on url, so only the frontier side moves and
-    #       html is neither broadcast, shuffled, nor sorted;
-    #   "auto"      — broadcast below `broadcast_row_limit` popped rows,
-    #       bucketed above it. This is the size-gated fallback a 10^10-URL
-    #       frontier needs: a BFS layer of tens of millions of URLs would
-    #       blow the 8 GB broadcast cap (and driver heap first).
+    #       pre-partitioned on url (spark.sql.shuffle.partitions buckets),
+    #       so only the frontier side moves and html is neither broadcast,
+    #       shuffled, nor sorted;
+    #   "auto"      — broadcast below BROADCAST_ROW_LIMIT / executors
+    #       popped rows, bucketed above it. This is the size-gated fallback
+    #       a 10^10-URL frontier needs: a BFS layer of tens of millions of
+    #       URLs would blow the 8 GB broadcast cap (and driver heap first).
     fetch_strategy: str = "auto"
-    broadcast_row_limit: int = 4_000_000
     # frontier pop order (north_star: "priority queue (depth + link-score
     # ordering)"):
     #   "fifo"     — insertion order (scheduled_round, depth, source, url);
@@ -164,20 +169,12 @@ class CrawlConfig:
     #       the pop never re-aggregates the whole edge table. Same
     #       distributed top-k plan shape (TakeOrderedAndProject); changes
     #       visit ORDER within a layer, never the crawled SET of an
-    #       exhaustive crawl.
-    #   "pagerank" — same pop, scored by linkgraph.pagerank over the
-    #       discovered graph, recomputed every `score_refresh_every`
-    #       rounds (the periodic full-graph refresh a production crawl
-    #       runs; Cho/Garcia-Molina/Page URL-ordering).
-    # "scored"/"pagerank" REQUIRE budget_per_round: an unbounded pop takes
-    # every pending row, so priority ordering would silently be a no-op
+    #       exhaustive crawl. Other scores (e.g. `cli linkrank`'s
+    #       PageRank) feed politeness.scored_pop directly.
+    # "scored" REQUIRES budget_per_round: an unbounded pop takes every
+    # pending row, so priority ordering would silently be a no-op
     # (validated in run_round — ADVICE r4 #3).
     pop_strategy: str = "fifo"
-    # pagerank-score refresh period, in rounds
-    score_refresh_every: int = 4
-    # partition count of the bucketed corpus layout; None → the session's
-    # spark.sql.shuffle.partitions
-    corpus_buckets: int | None = None
 
     def __post_init__(self):
         if self.bloom_buckets is None or self.bloom_buckets < 1:
@@ -213,8 +210,9 @@ class CrawlState:
     # validity+filter-passed candidates of every round — INCLUDING edges
     # whose target was already seen, so in-degree is a real signal
     # (ADVICE r4 #1; the claim-tree `links` above has in-degree ≤ 1 by
-    # construction). Deltas are lazy localCheckpoints: a FIFO crawl that
-    # never reads the graph never computes it.
+    # construction). Deltas are localCheckpoint(eager=False) leaves; with
+    # AQE on, building one still runs the shuffle stages of its plan, so a
+    # FIFO crawl that never reads the graph pays for it each round.
     link_graph: DataFrame = None  # type: ignore[assignment] — set by init/load
     # incremental priority state: unfolded (url, in_degree) delta rows,
     # one batch per round; `in_degrees` folds them. Compaction/checkpoint
@@ -222,10 +220,6 @@ class CrawlState:
     link_scores: DataFrame = None  # type: ignore[assignment] — set by init/load
     page_events: DataFrame | None = None
     content_events: DataFrame | None = None
-    # cached pagerank scores (pop_strategy="pagerank") + the round they
-    # were computed at; refreshed every CrawlConfig.score_refresh_every
-    rank_scores: DataFrame | None = None
-    rank_scored_round: int = -1
     bloom: PartitionedBloomSeen | None = None
     # True until a durable checkpoint backs the base tables: lets the
     # views skip the full-outer join against a provably-empty base (one
@@ -429,13 +423,6 @@ def combine_content(base: DataFrame, events: DataFrame | None) -> DataFrame:
     return kept.unionByName(latest)
 
 
-# legacy name used by driver query q08 — the one-shot merge IS operator A1
-def _merge_pages(pages: DataFrame, updates: DataFrame) -> DataFrame:
-    """A1 as a single-round full-outer merge (one update row per url)."""
-    events = updates.withColumn("_round", F.lit(0))
-    return combine_pages(pages, events)
-
-
 def recrawl_due(state: CrawlState, now: datetime) -> DataFrame:
     """S7/A5 — the rescheduler scan (db_reader.py:109-151, rescheduler
     loop rescheduler_service.py:36-71): pages whose next_crawl_at has
@@ -523,43 +510,23 @@ def run_round(
         pending = pending.unionByName(due)
 
     # --- T1/T3 pop + §2.9 politeness -------------------------------------
-    rank_scores, rank_scored_round = state.rank_scores, state.rank_scored_round
-    if cfg.pop_strategy not in ("fifo", "scored", "pagerank"):
+    if cfg.pop_strategy not in ("fifo", "scored"):
         raise ValueError(
             f"unknown pop_strategy {cfg.pop_strategy!r} — expected "
-            "'fifo', 'scored' or 'pagerank'"
+            "'fifo' or 'scored'"
         )
-    if cfg.pop_strategy != "fifo":
+    if cfg.pop_strategy == "scored":
         if cfg.budget_per_round is None:
             raise ValueError(
-                f"pop_strategy={cfg.pop_strategy!r} requires "
-                "budget_per_round: an unbounded pop takes every pending "
-                "row, so priority ordering would be a silent no-op"
+                "pop_strategy='scored' requires budget_per_round: an "
+                "unbounded pop takes every pending row, so priority "
+                "ordering would be a silent no-op"
             )
         from wikifrontier.politeness import scored_pop
 
-        if cfg.pop_strategy == "pagerank":
-            if (
-                rank_scores is None
-                or rnd - rank_scored_round >= cfg.score_refresh_every
-            ):
-                from wikifrontier.linkgraph import pagerank
-
-                pr = pagerank(
-                    state.link_graph.select(
-                        F.col("source_page_url").alias("src"),
-                        F.col("url").alias("dst"),
-                    )
-                )
-                rank_scores = pr.select(
-                    F.col("id").alias("url"), F.col("pr").alias("score")
-                ).localCheckpoint(eager=False)
-                rank_scored_round = rnd
-            batch = scored_pop(pending, rank_scores, cfg.budget_per_round)
-        else:
-            # incremental in-degree state: the fold below reads the
-            # per-round (url, d) delta log, never the edge table itself
-            batch = scored_pop(pending, state.in_degrees, cfg.budget_per_round)
+        # incremental in-degree state: the fold below reads the per-round
+        # (url, d) delta log, never the edge table itself
+        batch = scored_pop(pending, state.in_degrees, cfg.budget_per_round)
     else:
         batch = pop_frontier(pending, cfg.budget_per_round)
     popped = cap_per_host(batch, cfg.per_host_cap)
@@ -611,7 +578,7 @@ def run_round(
         # 4×8 the broadcast fetch is 26% slower than the bucketed join at
         # 1M popped rows, while single-JVM local[*] prefers broadcast to
         # 4M+ (BASELINE.md round-3 attribution). local[*] → divisor 1.
-        limit = cfg.broadcast_row_limit // _executor_count(spark)
+        limit = BROADCAST_ROW_LIMIT // _executor_count(spark)
         if cfg.budget_per_round is not None and cfg.budget_per_round <= limit:
             # auto, budgeted: the pop caps the batch below the limit a priori
             use_broadcast = True
@@ -630,7 +597,7 @@ def run_round(
         # caller didn't pre-bucket: correct but re-shuffles html this
         # round — run_crawl always passes a persisted bucketed layout
         fetch_corpus = bucket_corpus(
-            corpus, cfg.corpus_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
+            corpus, int(spark.conf.get("spark.sql.shuffle.partitions"))
         )
     hits = (
         _fetch_join(batch, fetch_corpus, use_broadcast)
@@ -697,7 +664,7 @@ def run_round(
         F.lit(rnd).cast("int").alias("_round"),
     )
 
-    # --- §3.3 schedule: explode → S1/P7 gate → D1 → F1-F5 → D2 claim ------
+    # --- §3.3 schedule: explode → S1/P7 gate → F1-F5 → D2 claim → D1 ------
     candidates = parsed.select(F.explode("p.links").alias("l")).select("l.*")
 
     # S1/P7 — message validity gate ahead of dedup/filtering (the
@@ -724,57 +691,21 @@ def run_round(
         robots_rules=robots_rules,
     )
 
-    if cfg.collect_metrics:
-        # reference operator order (D1 → F → D2,
-        # schedule_service.py:66-112) so per-filter counters attribute
-        # exactly as the reference's Prometheus labels do
-        candidates = candidates.persist()
-        unseen = (
-            drop_seen(candidates, state.seen, state.bloom, spark)
-            .withColumn("_reason", reason_col)
-            .persist()
-        )
-        claimed = claim_first_wins(
-            unseen.filter(F.col("_reason").isNull())
-        ).localCheckpoint(eager=True)
-        # ONE driver action for all round counters (was 4 jobs: an
-        # agg-collect, two counts, and a groupBy-collect): tag each frame
-        # with (src, k) and count in a single grouped aggregate. The
-        # partial agg collapses every partition to a handful of (src, k)
-        # rows before the shuffle. This MUST run here — before
-        # bloom.add_df() below mutates the shard files — because a cache
-        # miss on `unseen` would recompute drop_seen against the grown
-        # bloom and skew the dedup/filter counters (observed as
-        # links_dedup_dropped drift when the tally ran post-fold).
-        tag = lambda df, src, k: df.select(  # noqa: E731
-            F.lit(src).alias("src"), k.alias("k")
-        )
-        metric_tallies = (
-            tag(round_result, "fetch", F.col("_status"))
-            .unionByName(tag(candidates, "cand", F.lit(None).cast("string")))
-            .unionByName(tag(unseen, "unseen", F.col("_reason")))
-            .unionByName(tag(claimed, "claim", F.lit(None).cast("string")))
-            .groupBy("src", "k")
-            .count()
-            .collect()
-        )
-    else:
-        metric_tallies = None
-        # fast path: F → D2 → D1. The claimed/link/seen/frontier STATE is
-        # identical (seen-dedup removes whole urls; the claim picks
-        # within-url winners — the two commute), but the anti-join now
-        # probes only ~|winners| rows instead of every candidate, and the
-        # claim's url-shuffle is the single wide stage of the phase.
-        unseen = None
-        winners = claim_first_wins(
-            candidates.withColumn("_reason", reason_col)
-            .filter(F.col("_reason").isNull())
-        ).localCheckpoint(eager=True)  # materialize BEFORE the bloom split —
-        # drop_seen's two branches each rescan their input, and rescanning
-        # the window subtree would double the round's widest stage
-        claimed = drop_seen(
-            winners, state.seen, state.bloom, spark
-        ).localCheckpoint(eager=True)
+    # F → D2 → D1: filter, claim, then the seen check. The state equals the
+    # reference's D1 → F → D2 order (seen-dedup removes whole urls; the
+    # claim picks within-url winners — the two commute), but the anti-join
+    # probes only ~|winners| rows instead of every candidate, and the
+    # claim's url-shuffle is the single wide stage of the phase. The A6
+    # counters below still attribute in the reference order.
+    winners = claim_first_wins(
+        candidates.withColumn("_reason", reason_col)
+        .filter(F.col("_reason").isNull())
+    ).localCheckpoint(eager=True)  # materialize BEFORE the bloom split —
+    # drop_seen's two branches each rescan their input, and rescanning
+    # the window subtree would double the round's widest stage
+    claimed = drop_seen(
+        winners, state.seen, state.bloom, spark
+    ).localCheckpoint(eager=True)
 
     n_claimed_hint = None
     if state.bloom is not None:
@@ -787,10 +718,10 @@ def run_round(
     # candidates — PRE-seen and PRE-claim, so edges into already-crawled
     # pages are kept and in-degree is a real priority signal (the
     # claim-tree `links` table keeps reference parity; this is the edge
-    # relation its composite PK was built for, models.py:108-155). Lazy
-    # localCheckpoint: nothing is computed until the graph or the score
-    # fold is actually read (scored pop / pagerank refresh / checkpoint /
-    # linkrank) — a FIFO crawl pays zero for this.
+    # relation its composite PK was built for, models.py:108-155). The
+    # deltas are localCheckpoint(eager=False) leaves, read by the scored
+    # pop, the checkpoint and linkrank; with AQE on, building one still runs
+    # the shuffle stages of its plan, so a FIFO crawl pays for them too.
     edge_delta = (
         candidates.filter(reason_col.isNull())
         .select(
@@ -910,29 +841,58 @@ def run_round(
     # --- A6 metrics -------------------------------------------------------
     counters: dict = {"round": rnd}
     if cfg.collect_metrics:
+        # ONE read-only driver action for all round counters: tag each
+        # frame with (src, k) and count in a single grouped aggregate. The
+        # reference order (D1 → F → D2, schedule_service.py:66-112) drops
+        # seen urls before filtering, so each candidate is tagged seen or
+        # unseen and a filter counts only the unseen rows it rejects. The
+        # tag is an exact existence join against the pre-round seen table,
+        # never the Bloom filter that bloom.add_df has grown. It reads the
+        # candidates once; a second, semi-joined copy of them doubled the
+        # tally's time.
+        tag = lambda df, src, k: df.select(  # noqa: E731
+            src.alias("src"), k.alias("k")
+        )
+        in_seen = (
+            state.seen.alias("seen")
+            .where(F.col("seen.url") == F.col("cand.url").outer())
+            .exists()
+        )
+        tallies = (
+            tag(round_result, F.lit("fetch"), F.col("_status"))
+            .unionByName(
+                tag(
+                    candidates.alias("cand"),
+                    F.when(in_seen, "seen").otherwise("unseen"),
+                    reason_col,
+                )
+            )
+            .unionByName(tag(claimed, F.lit("claim"), F.lit(None).cast("string")))
+            .groupBy("src", "k")
+            .count()
+            .collect()
+        )
         by_src: dict = {}
-        for r in metric_tallies:
+        for r in tallies:
             by_src.setdefault(r["src"], {})[r["k"]] = r["count"]
         fetch_counts = by_src.get("fetch", {})
         n_popped = sum(fetch_counts.values())
         n_ok = fetch_counts.get("SUCCESS", 0)
-        reason_counts = by_src.get("unseen", {})
-        n_candidates = sum(by_src.get("cand", {}).values())
-        n_unseen = sum(reason_counts.values())
-        n_claimed = sum(by_src.get("claim", {}).values())
+        n_seen = sum(by_src.get("seen", {}).values())
+        unseen_by_reason = by_src.get("unseen", {})
         counters.update(
             urls_popped=n_popped,
             fetch_success=n_ok,
             fetch_failed=n_popped - n_ok,
             pages_parsed=n_ok,
-            links_extracted=n_candidates,
-            links_dedup_dropped=n_candidates - n_unseen,
-            filtered_depth=reason_counts.get("depth", 0),
-            filtered_domain=reason_counts.get("domain", 0),
-            filtered_prefix=reason_counts.get("prefix", 0),
-            filtered_home_page=reason_counts.get("home_page", 0),
-            filtered_robots=reason_counts.get("robots_txt", 0),
-            links_claimed=n_claimed,
+            links_extracted=n_seen + sum(unseen_by_reason.values()),
+            links_dedup_dropped=n_seen,
+            filtered_depth=unseen_by_reason.get("depth", 0),
+            filtered_domain=unseen_by_reason.get("domain", 0),
+            filtered_prefix=unseen_by_reason.get("prefix", 0),
+            filtered_home_page=unseen_by_reason.get("home_page", 0),
+            filtered_robots=unseen_by_reason.get("robots_txt", 0),
+            links_claimed=sum(by_src.get("claim", {}).values()),
         )
         metrics_row = spark.createDataFrame(
             [tuple(counters.get(f.name) for f in schemas.ddl_to_schema(schemas.METRICS_DDL))],
@@ -956,8 +916,6 @@ def run_round(
         link_scores=new_link_scores,
         page_events=new_page_events,
         content_events=new_content_events,
-        rank_scores=rank_scores,
-        rank_scored_round=rank_scored_round,
         bloom=state.bloom,
         bases_empty=state.bases_empty,
         # hint is only sound when next round's pending is exactly this
@@ -983,10 +941,6 @@ def run_round(
             keep_last=cfg.checkpoint_keep_last,
             full_every=cfg.checkpoint_full_every,
         )
-
-    if cfg.collect_metrics:
-        candidates.unpersist()
-        unseen.unpersist()
     return new_state, counters
 
 
@@ -1055,10 +1009,9 @@ def run_crawl(
     # broadcast limit never materializes (or pays for) this copy
     corpus_bucketed = None
     if cfg.fetch_strategy != "broadcast":
-        buckets = cfg.corpus_buckets or int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        corpus_bucketed = bucket_corpus(corpus, buckets).persist()
+        corpus_bucketed = bucket_corpus(
+            corpus, int(spark.conf.get("spark.sql.shuffle.partitions"))
+        ).persist()
 
     try:
         while state.round < cfg.max_rounds:

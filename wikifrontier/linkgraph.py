@@ -15,11 +15,12 @@ Scale shape: each iteration is one equi-join of the edge list against the
 current rank vector (shuffle keyed on src), one keyed groupBy on dst
 (map-side partial sums), and one left join back to the node set — the
 textbook distributed PageRank dataflow. Nothing is ever collected to the
-driver; the per-iteration dangling-mass scalar rides a 1-row broadcast
-crossJoin so the whole fixed-iteration computation stays ONE declarative
-plan with zero in-loop actions. ``localCheckpoint(eager=False)`` caps the
-lineage so the plan does not deepen with the iteration count. At 10^10
-edges the same loop holds: the edge list is the only large operand, it is
+driver: the per-iteration dangling-mass scalar rides a 1-row broadcast
+crossJoin. ``localCheckpoint(eager=False)`` caps the lineage so the plan
+does not deepen with the iteration count; with AQE on, building each such
+checkpoint runs the shuffle stages of its plan, so every iteration still
+runs Spark jobs. At 10^10 edges the same loop holds: the edge list is the
+only large operand, it is
 scanned once per iteration, and the shuffle volume per iteration is
 O(edges) partial-aggregated down to O(nodes).
 """

@@ -227,7 +227,7 @@ def q08_pages_merge(spark, sf_dir):
         .otherwise(F.lit("SKIPPED")),
         404,
     )
-    merged = frontier._merge_pages(old, new)
+    merged = frontier.combine_pages(old, new.withColumn("_round", F.lit(0)))
     return merged.select(
         "url",
         "last_crawl_status",

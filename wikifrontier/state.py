@@ -208,8 +208,6 @@ def write_checkpoint(
             retries=_reload("retries"),
             link_graph=state.link_graph,
             link_scores=state.folded_scores().localCheckpoint(eager=True),
-            rank_scores=state.rank_scores,
-            rank_scored_round=state.rank_scored_round,
             bloom=state.bloom,
             bases_empty=False,
         )
@@ -232,8 +230,6 @@ def write_checkpoint(
         # the reloaded state's delta log restarts from the compacted base
         link_graph=reloaded["link_graph"],
         link_scores=reloaded["link_scores"],
-        rank_scores=state.rank_scores,
-        rank_scored_round=state.rank_scored_round,
         bloom=state.bloom,
         bases_empty=False,
     )
