@@ -273,7 +273,8 @@ class TestIncrementalCheckpoints:
         """A delta snapshot's seen/links/link_graph segments contain only
         rows born since the previous snapshot; the manifests carry the
         full/delta kinds and the chain; union-over-chain equals the live
-        state; non-head chain members are trimmed to delta segments."""
+        state, which reads parquet only; non-head chain members are
+        trimmed to delta segments."""
         from wikifrontier import state as state_io
         from wikifrontier import synth
 
@@ -281,6 +282,12 @@ class TestIncrementalCheckpoints:
         ckpt = wo(tmp_path / "ckpt_v3")
         st = self._crawl(spark, corpus, ckpt, max_rounds=5, full_every=5)
         io_ = fsio.get_io(ckpt)
+
+        # the post-commit state is backed by parquet only: no in-memory
+        # (LogicalRDD) leaf of any round survives the delta commit
+        for name, df in st.tables().items():
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "LogicalRDD" not in plan, name
 
         kinds = {}
         for n, entry in state_io._round_entries(ckpt):

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from wikifrontier import filters as flt
 from wikifrontier import schemas
+from wikifrontier import state as state_io
 from wikifrontier.politeness import cap_per_host, pop_frontier
 from wikifrontier.seen import PartitionedBloomSeen, claim_first_wins, drop_seen
 from wikifrontier.udfs import parse_page_udf
@@ -82,9 +83,10 @@ class CrawlConfig:
     # Durable round snapshots. REQUIRED on multi-executor clusters: without
     # it per-round state rests on localCheckpoint blocks whose lineage is
     # truncated — an executor loss makes them unrecoverable and the
-    # accumulated tables grow as O(rounds) union chains. The checkpoint
-    # doubles as event-log compaction — the engine's only one — bounding
-    # both; a long crawl whose event log grows too deep should set it.
+    # accumulated tables grow as O(rounds) union chains. Every commit
+    # hands the next round exactly the state load_checkpoint would return
+    # — parquet only, no in-memory leaf survives it — so it bounds both;
+    # a long crawl whose event log grows too deep should set it.
     checkpoint_dir: str | None = None
     # write the durable snapshot every K rounds (1 = every round). Larger
     # K amortizes the per-round fixed cost; recovery replays at most K-1
@@ -94,17 +96,20 @@ class CrawlConfig:
     # after each commit so an unbounded crawl's checkpoint dir stays
     # O(K × state size), not O(rounds). 0 = never prune.
     checkpoint_keep_last: int = 2
-    # every Nth durable snapshot is FULL (rewrites every state table);
+    # every Nth durable snapshot is FULL (rewrites every state table —
+    # also the on-disk compaction of the pages/page_content event log);
     # the ones between are INCREMENTAL — append-only tables (seen, links,
     # link_graph, link_scores, metrics, invalid_rows) write only rows born
     # since the previous snapshot (a filter on their monotone round
     # column), and pages/page_content write only the event log since the
     # previous snapshot (merge-on-read: the loader folds base ⊕ events,
-    # exactly Iceberg's MERGE-on-read delete/data-file split). At a 10^10
-    # frontier this is THE durability knob: a full snapshot rewrites the
-    # whole seen set every K rounds — O(crawl so far) parquet I/O per
-    # checkpoint — while a delta writes O(round) rows. 1 = always full
-    # (the pre-v3 layout).
+    # exactly Iceberg's MERGE-on-read delete/data-file split). After a
+    # delta commit the crawl reads each table from its chain's parquet
+    # segments, so N also bounds the segments every round scans. At a
+    # 10^10 frontier this is THE durability knob: a full snapshot
+    # rewrites the whole seen set every K rounds — O(crawl so far)
+    # parquet I/O per checkpoint — while a delta writes O(round) rows.
+    # 1 = always full (the pre-v3 layout).
     checkpoint_full_every: int = 8
     collect_metrics: bool = True
     # Bloom pre-filter over the seen set (north_rule). None disables; the
@@ -195,7 +200,7 @@ class CrawlState:
     """Crawl state. `pages` / `page_content` are *views*: the base table
     from the last durable checkpoint (or empty) combined with the
     append-only event log accumulated since (`page_events` /
-    `content_events`, both None right after a checkpoint load)."""
+    `content_events`, both None right after a checkpoint commit or load)."""
 
     round: int
     pending: DataFrame
@@ -251,17 +256,6 @@ class CrawlState:
             F.sum("in_degree").cast("long").alias("in_degree")
         )
 
-    def folded_scores(self) -> DataFrame:
-        """The score log collapsed to one row per url, stamped with the
-        last completed round — the compaction/checkpoint form. The stamp
-        keeps the round column monotone: rows folded at round R carry
-        R-1, and every later per-round delta carries its own rnd ≥ R, so
-        an incremental snapshot's `scored_round >= R` filter never
-        re-writes folded history."""
-        return self.in_degrees.withColumn(
-            "scored_round", F.lit(max(self.round - 1, 0)).cast("int")
-        )
-
     def tables(self) -> dict[str, DataFrame]:
         return {
             "pending": self.pending,
@@ -270,9 +264,13 @@ class CrawlState:
             "page_content": self.page_content,
             "links": self.links,
             "link_graph": self.link_graph,
-            # persist the FOLDED score state (one row per url) — same
-            # schema as the delta log it replaces on reload
-            "link_scores": self.folded_scores(),
+            # the score log FOLDED to one row per url, stamped with the last
+            # completed round: rows folded at round R carry R-1 and every
+            # later per-round delta its own rnd ≥ R, so a delta snapshot's
+            # `scored_round >= R` filter never re-writes folded history
+            "link_scores": self.in_degrees.withColumn(
+                "scored_round", F.lit(max(self.round - 1, 0)).cast("int")
+            ),
             "metrics": self.metrics,
             "invalid_rows": self.invalid_rows,
             "retries": self.retries,
@@ -927,21 +925,21 @@ def run_round(
         ),
     )
 
-    # --- durable checkpoint (optional; also compacts the event log) -------
+    # --- durable checkpoint (optional; part of the round) ------------------
     if (
         cfg.checkpoint_dir is not None
         and (rnd + 1) % max(cfg.checkpoint_every, 1) == 0
     ):
-        from wikifrontier import state as state_io
-
-        new_state = state_io.write_checkpoint(
-            spark,
-            new_state,
-            cfg.checkpoint_dir,
-            keep_last=cfg.checkpoint_keep_last,
-            full_every=cfg.checkpoint_full_every,
-        )
+        new_state = _commit(spark, new_state, cfg)
     return new_state, counters
+
+
+def _commit(spark: SparkSession, state: CrawlState, cfg: CrawlConfig) -> CrawlState:
+    """Commit ``state``; return the state a resume would load from it."""
+    return state_io.write_checkpoint(
+        spark, state, cfg.checkpoint_dir,
+        keep_last=cfg.checkpoint_keep_last, full_every=cfg.checkpoint_full_every,
+    )
 
 
 def _bloom_nbits_per_bucket(cfg: CrawlConfig) -> int:
@@ -979,8 +977,6 @@ def run_crawl(
     """
     state = None
     if resume and cfg.checkpoint_dir is not None:
-        from wikifrontier import state as state_io
-
         state = state_io.load_checkpoint(
             spark, cfg.checkpoint_dir, bloom_storage_dir=cfg.bloom_storage_dir
         )
@@ -1026,18 +1022,13 @@ def run_crawl(
                     break
             state, _ = run_round(spark, state, corpus, cfg, corpus_bucketed)
 
-        if cfg.checkpoint_dir is not None:
-            from wikifrontier import state as state_io
-
-            # the final round always checkpoints, whatever
-            # checkpoint_every — a resumed job must never replay
-            # completed work past the end
-            if state_io.latest_round(cfg.checkpoint_dir) != state.round:
-                state = state_io.write_checkpoint(
-                    spark, state, cfg.checkpoint_dir,
-                    keep_last=cfg.checkpoint_keep_last,
-                    full_every=cfg.checkpoint_full_every,
-                )
+        # the final round always checkpoints, whatever checkpoint_every —
+        # a resumed job must never replay completed work past the end
+        if (
+            cfg.checkpoint_dir is not None
+            and state_io.latest_round(cfg.checkpoint_dir) != state.round
+        ):
+            state = _commit(spark, state, cfg)
     finally:
         if corpus_bucketed is not None:
             # round outputs are localCheckpoint'd leaves — nothing in the

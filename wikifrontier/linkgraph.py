@@ -50,7 +50,11 @@ def pagerank(
     (source, target) mention — multi-mentions must not multi-count).
     Dangling nodes (no out-edges) redistribute their mass uniformly each
     iteration, so sum(pr) stays 1 and the result matches the closed-form
-    oracle exactly. Fixed iteration count (not convergence-probed) keeps
+    oracle exactly. That holds from the uniform prior; a partial ``init``
+    (nodes missing from it take 1/n) starts from a total S that is not 1,
+    and each iteration maps it to (1 - damping) + damping·S, so the
+    teleport term pulls the sum back towards 1 by a factor of ``damping``
+    per iteration without reaching it. Fixed iteration count (not convergence-probed) keeps
     the computation a single deterministic plan — the form an oracle can
     replay and a scheduler can cost.
 

@@ -33,6 +33,11 @@ retention can eventually drop old history. A delta manifest carries the
 full base); the loader unions each table's segments across the chain in
 ONE parquet scan (same schema, multi-path read).
 
+A commit returns exactly the state ``load_checkpoint`` would load from
+it (both build it in ``_state_at``): a delta head is re-backed from its
+chain's parquet segments, with nothing re-materialized and no in-memory
+leaf of an earlier round kept.
+
 The manifest carries a format version (``manifest_version`` — bumped when
 the snapshot layout changes so an old engine never misreads a new layout).
 
@@ -119,15 +124,14 @@ def write_checkpoint(
     spark: SparkSession, state, ckpt_dir: str, keep_last: int = 2,
     full_every: int = 8,
 ):
-    """Write the round snapshot for state.round; return state re-backed so
-    lineage is truncated for the next round. The snapshot is FULL when no
+    """Write the round snapshot for state.round and return the state a
+    resume would load from it (``_state_at``; a delta head is re-backed
+    from its chain's parquet segments). The snapshot is FULL when no
     previous v3 snapshot exists or the delta chain has reached
     ``full_every`` members, else DELTA (see module docstring). After the
     manifest commit, prune history down to the newest ``keep_last``
     committed rounds plus their chains (``keep_last=0`` disables
     pruning)."""
-    from wikifrontier.frontier import CrawlState
-
     io_ = fsio.get_io(ckpt_dir)
     round_dir = io_.join(ckpt_dir, f"round={state.round}")
     # Spark's own parquet reader/writer handles real URIs (s3a:// etc)
@@ -164,11 +168,6 @@ def write_checkpoint(
     for name, df in written.items():
         df.write.mode("overwrite").parquet(f"{spark_round_dir}/{name}")
 
-    def _reload(name: str):
-        return spark.read.schema(
-            schemas.ddl_to_schema(TABLE_DDLS[name])
-        ).parquet(f"{spark_round_dir}/{name}")
-
     manifest = {
         "manifest_version": MANIFEST_VERSION,
         "round": state.round,
@@ -187,52 +186,7 @@ def write_checkpoint(
     )
     if keep_last > 0:
         prune_checkpoints(ckpt_dir, keep_last=keep_last, newest=state.round)
-
-    if delta:
-        # only O(round) rows hit disk, so the in-memory state cannot be
-        # re-backed by this snapshot alone. Instead: truncate the
-        # merge-view lineage in memory (the full snapshot's compaction
-        # algebra, minus the parquet round-trip), keep the append-only
-        # tables' lazy unions — their leaves are already localCheckpointed
-        # per round and the chain depth is bounded by full_every — and
-        # re-back only the fully-written live tables from parquet.
-        return CrawlState(
-            round=state.round,
-            pending=_reload("pending"),
-            seen=state.seen,
-            links=state.links,
-            metrics=state.metrics,
-            pages_base=state.pages.localCheckpoint(eager=True),
-            content_base=state.page_content.localCheckpoint(eager=True),
-            invalid_rows=state.invalid_rows,
-            retries=_reload("retries"),
-            link_graph=state.link_graph,
-            link_scores=state.folded_scores().localCheckpoint(eager=True),
-            bloom=state.bloom,
-            bases_empty=False,
-        )
-
-    # full snapshot doubles as event-log compaction: the written pages /
-    # page_content tables are the folded views, so the reloaded state
-    # carries them as bases with an empty event log
-    reloaded = {name: _reload(name) for name in written}
-    return CrawlState(
-        round=state.round,
-        pending=reloaded["pending"],
-        seen=reloaded["seen"],
-        links=reloaded["links"],
-        metrics=reloaded["metrics"],
-        pages_base=reloaded["pages"],
-        content_base=reloaded["page_content"],
-        invalid_rows=reloaded["invalid_rows"],
-        retries=reloaded["retries"],
-        # the snapshot holds the deduped graph and the FOLDED score rows —
-        # the reloaded state's delta log restarts from the compacted base
-        link_graph=reloaded["link_graph"],
-        link_scores=reloaded["link_scores"],
-        bloom=state.bloom,
-        bases_empty=False,
-    )
+    return _state_at(spark, ckpt_dir, state.round, manifest, bloom=state.bloom)
 
 
 def _round_entries(ckpt_dir: str) -> list[tuple[int, str]]:
@@ -311,19 +265,15 @@ def latest_round(ckpt_dir: str) -> int | None:
 def load_checkpoint(
     spark: SparkSession, ckpt_dir: str, bloom_storage_dir: str | None = None
 ):
-    """Load the newest complete round snapshot, or None.
-
-    A delta head loads each append-only table as ONE multi-path parquet
-    scan over its chain segments (identical schema per segment), and the
-    pages/page_content views as the chain base folded with the replayed
-    event segments — then hands the folds to the state as new bases, so
-    the next delta snapshot never re-writes replayed events.
+    """Load the newest complete round snapshot, or None: check the head's
+    manifest version, re-open its seen-filter, and build the state with
+    ``_state_at`` — the same function ``write_checkpoint`` returns
+    through, so a resumed crawl and an uninterrupted one go on from the
+    same state.
 
     ``bloom_storage_dir`` — working dir for the re-opened partitioned
     seen-filter (shared storage on clusters; tempdir fallback is
     local-mode-only)."""
-    from wikifrontier.frontier import CrawlState, combine_content, combine_pages
-
     n = latest_round(ckpt_dir)
     if n is None:
         return None
@@ -336,6 +286,30 @@ def load_checkpoint(
             f"checkpoint {head_dir} has manifest_version={found}; this "
             f"engine reads ≤ {MANIFEST_VERSION} — upgrade before resuming"
         )
+    # a head without bloom_shards/ (no filter, or a legacy single-bitmap
+    # bloom.npz) loads with bloom=None; run_crawl rebuilds it from seen
+    shards_dir = io_.join(head_dir, "bloom_shards")
+    bloom = None
+    if io_.exists(shards_dir):
+        from wikifrontier.seen import PartitionedBloomSeen
+
+        bloom = PartitionedBloomSeen.load(shards_dir, storage_dir=bloom_storage_dir)
+    return _state_at(spark, ckpt_dir, n, manifest, bloom)
+
+
+def _state_at(spark: SparkSession, ckpt_dir: str, n: int, manifest: dict, bloom):
+    """The crawl state committed at round ``n`` (manifest ``manifest``),
+    backed by parquet only — the one place a post-checkpoint state is
+    built.
+
+    A delta head loads each append-only table as ONE multi-path parquet
+    scan over its chain segments (identical schema per segment), and the
+    pages/page_content views as the chain base folded with the replayed
+    event segments — then hands the folds to the state as new bases, so
+    the next delta snapshot never re-writes replayed events."""
+    from wikifrontier.frontier import CrawlState, combine_content, combine_pages
+
+    io_ = fsio.get_io(ckpt_dir)
     chain = manifest.get("chain", [n])
     dirs = {r: io_.join(ckpt_dir, f"round={r}") for r in chain}
 
@@ -357,9 +331,7 @@ def load_checkpoint(
         return spark.read.schema(schema).parquet(*paths)
 
     tables = {name: read(name, [n]) for name in LIVE_TABLES}
-    tables.update(
-        {name: read(name, chain) for name in DELTA_ROUND_COLS}
-    )
+    tables.update({name: read(name, chain) for name in DELTA_ROUND_COLS})
     # merge-on-read: the chain base holds the folded tables; delta rounds
     # hold event segments. Fold base ⊕ events lazily and hand the result
     # to the state as the new base (events=None) — replayed events must
@@ -372,27 +344,7 @@ def load_checkpoint(
         pages_base = combine_pages(pages_base, spark.read.parquet(*pe_paths))
     if ce_paths:
         content_base = combine_content(content_base, spark.read.parquet(*ce_paths))
-
-    # a head without bloom_shards/ (no filter, or a legacy single-bitmap
-    # bloom.npz) loads with bloom=None; run_crawl rebuilds it from seen
-    shards_dir = io_.join(head_dir, "bloom_shards")
-    bloom = None
-    if io_.exists(shards_dir):
-        from wikifrontier.seen import PartitionedBloomSeen
-
-        bloom = PartitionedBloomSeen.load(shards_dir, storage_dir=bloom_storage_dir)
     return CrawlState(
-        round=n,
-        pending=tables["pending"],
-        seen=tables["seen"],
-        links=tables["links"],
-        metrics=tables["metrics"],
-        pages_base=pages_base,
-        content_base=content_base,
-        invalid_rows=tables["invalid_rows"],
-        retries=tables["retries"],
-        link_graph=tables["link_graph"],
-        link_scores=tables["link_scores"],
-        bloom=bloom,
-        bases_empty=False,
+        round=n, pages_base=pages_base, content_base=content_base,
+        bloom=bloom, bases_empty=False, **tables,
     )

@@ -1424,8 +1424,11 @@ def c4_line_filter(df, id_col: str = "doc_id", text: str = "text"):
         banned.alias("is_banned"),
     )
     ok = ~(F.col("is_short") | F.col("is_nopunct") | F.col("is_banned"))
-    # corpus-wide first occurrence among line-rule survivors only (C4
-    # dedups the text that would otherwise ship) — losers keep occ > 1
+    # corpus-wide first occurrence among line-rule survivors (C4 dedups
+    # the text that would otherwise ship) — losers keep occ > 1. The
+    # window ranks EVERY occurrence, not just survivors; that is exact
+    # only because the three line rules are pure functions of the line
+    # text, so all rows of one `line` partition pass or fail together
     w_line = Window.partitionBy("line").orderBy(id_col, "line_idx")
     flagged = flagged.withColumn(
         "occ",
