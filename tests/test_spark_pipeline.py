@@ -29,6 +29,33 @@ def default_crawl(spark, corpus):
     return run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], DEFAULT_CFG)
 
 
+# an 8-round in-memory crawl that re-parses every page (so the first-parse
+# guard has work in every round); its link-graph edges stay pending until
+# first read
+RECRAWL_CFG = CrawlConfig(
+    robots_txt=synth.ROBOTS_TXT, max_rounds=8,
+    enable_recrawl=True, recrawl_interval_s=2,
+)
+
+
+@pytest.fixture(scope="module")
+def recrawl_crawl(spark, corpus):
+    """The in-memory recrawl crawl, returned with its edge log unread.
+    Tests read a ``dataclasses.replace`` copy, so the materialization
+    one of them triggers never reaches the shared state."""
+    return run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], RECRAWL_CFG)
+
+
+def _job_ids(sc, group, action):
+    """Spark job ids that ``action()`` starts, via a job group."""
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
 def _assert_state_matches(state, sim):
     pages = {r["url"]: r.asDict() for r in state.pages.collect()}
     assert set(pages) == set(sim["pages"])
@@ -323,6 +350,102 @@ class TestLinkGraph:
             )
 
         assert snap(chained) == snap(fresh)
+
+    def test_fifo_round_runs_no_job_after_bloom_add(
+        self, spark, corpus, monkeypatch
+    ):
+        """An in-memory FIFO round with counters off ends at the Bloom add:
+        the link-graph delta, the seen/links/pending unions and the event
+        logs are all lazy, so nothing after ``add_df`` starts a Spark job."""
+        from wikifrontier import frontier
+        from wikifrontier.seen import PartitionedBloomSeen
+
+        cfg = CrawlConfig(robots_txt=synth.ROBOTS_TXT, collect_metrics=False)
+        sc = spark.sparkContext
+        add_df = PartitionedBloomSeen.add_df
+        group = {}
+
+        def add_then_mark(self, *args, **kwargs):
+            out = add_df(self, *args, **kwargs)
+            sc.setJobGroup(group["id"], "after PartitionedBloomSeen.add_df")
+            return out
+
+        monkeypatch.setattr(PartitionedBloomSeen, "add_df", add_then_mark)
+        state = frontier.init_state(spark, [synth.page_url(synth.SEED_ID)])
+        bloom = state.bloom = frontier._new_bloom(cfg)
+        try:
+            for rnd in range(3):
+                group["id"] = f"after-bloom-add-{rnd}"
+                state, _ = frontier.run_round(spark, state, corpus, cfg)
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                jobs = sc.statusTracker().getJobIdsForGroup(group["id"])
+                assert jobs == [], (rnd, jobs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            bloom.cleanup()
+        assert state.edge_events is not None  # three rounds still pending
+        assert state.link_graph.count() > 0
+
+    def test_pending_edges_materialize_once(self, spark, recrawl_crawl):
+        """All pending rounds fold into the graph on the first read, as one
+        edge leaf and one score leaf, through a plan with O(rounds)
+        leaves; later reads, and ``tables()``, start no job."""
+        from dataclasses import replace
+
+        def leaves(df):
+            return df._jdf.queryExecution().optimizedPlan().toString().count(
+                "LogicalRDD"
+            )
+
+        state = replace(recrawl_crawl)
+        n_rounds = state.round
+        assert n_rounds >= 8 and state.edge_events is not None
+        # each pending round's fetch leaf is read at most twice: for its
+        # edges and for its content events. A per-round guard against all
+        # earlier rounds would read sum(1..R) content leaves instead.
+        n_leaves = leaves(state.pending_edges())
+        assert n_leaves <= 2 * n_rounds < n_rounds * (n_rounds + 1) // 2, n_leaves
+        n_base = leaves(state.graph_base), leaves(state.scores_base)
+
+        sc = spark.sparkContext
+        first = _job_ids(sc, "link-graph-first-read", lambda: state.link_graph)
+        assert len(first) >= 1
+        assert state.edge_events is None
+        again = _job_ids(
+            sc, "link-graph-again",
+            lambda: (state.link_graph, state.in_degrees, state.tables()),
+        )
+        assert again == []
+        # one edge leaf and one score leaf joined the bases
+        assert (leaves(state.link_graph), leaves(state.link_scores)) == (
+            n_base[0] + 1, n_base[1] + 1
+        )
+        assert recrawl_crawl.edge_events is not None  # the fixture is untouched
+
+    def test_pending_windows_match_in_memory(
+        self, spark, corpus, recrawl_crawl, tmp_path
+    ):
+        """Committing every third round leaves three rounds of edges
+        pending before each commit, guarded against the checkpointed
+        content base and the rounds' own content events. The graph and
+        the in-degrees still equal the in-memory run's, whose eight rounds
+        all materialize at once."""
+        from dataclasses import replace
+
+        fresh = replace(recrawl_crawl)
+        windowed = run_crawl(
+            spark, corpus, [synth.page_url(synth.SEED_ID)],
+            replace(
+                RECRAWL_CFG, checkpoint_dir=str(tmp_path / "ckpt_windows"),
+                checkpoint_every=3,
+            ),
+        )
+        assert sorted(map(tuple, windowed.link_graph.collect())) == sorted(
+            map(tuple, fresh.link_graph.collect())
+        )
+        assert sorted(map(tuple, windowed.in_degrees.collect())) == sorted(
+            map(tuple, fresh.in_degrees.collect())
+        )
 
 
 class TestCheckpointResume:

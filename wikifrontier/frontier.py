@@ -12,12 +12,14 @@ Scale design decisions (SURVEY.md §4.2):
 * the seen-set anti-join shuffles on url; runtime Bloom filter pre-prunes.
 * the global pop is a distributed top-k, never a global sort.
 * **state is append-only deltas, folded lazily.** Each round materializes
-  only its own O(delta) outputs (claimed links, page events, parsed
-  content); the accumulated pages/page_content tables are *views* — an
-  aggregation over the event log — evaluated when read or durably
-  checkpointed. The alternative (full-outer-merge rewrite of every state
-  table per round, as the first cut did) is O(total-crawled) per round —
-  quadratic over a crawl and unusable at a 10^10-URL frontier.
+  only the O(delta) outputs its own later steps read (the fetch+parse
+  outcome, the claimed links); the accumulated pages/page_content tables
+  are *views* — an aggregation over the event log — evaluated when read
+  or durably checkpointed, and the discovered link graph is an edge log
+  materialized once, by its first reader. The alternative
+  (full-outer-merge rewrite of every state table per round, as the first
+  cut did) is O(total-crawled) per round — quadratic over a crawl and
+  unusable at a 10^10-URL frontier.
 * metrics are DataFrame aggregates (accumulators are unreliable): one
   read-only grouped count per round over the round's checkpointed leaves,
   attributed in the reference's D1 → F → D2 order — reference A6.
@@ -211,20 +213,24 @@ class CrawlState:
     content_base: DataFrame
     invalid_rows: DataFrame = None  # type: ignore[assignment] — set by init/load
     retries: DataFrame = None  # type: ignore[assignment] — set by init/load
-    # full discovered link graph: distinct (source_page_url, url) over the
-    # validity+filter-passed candidates of every round — INCLUDING edges
-    # whose target was already seen, so in-degree is a real signal
-    # (ADVICE r4 #1; the claim-tree `links` above has in-degree ≤ 1 by
-    # construction). Deltas are localCheckpoint(eager=False) leaves; with
-    # AQE on, building one still runs the shuffle stages of its plan, so a
-    # FIFO crawl that never reads the graph pays for it each round.
-    link_graph: DataFrame = None  # type: ignore[assignment] — set by init/load
-    # incremental priority state: unfolded (url, in_degree) delta rows,
-    # one batch per round; `in_degrees` folds them. Compaction/checkpoint
-    # collapse to one row per url.
-    link_scores: DataFrame = None  # type: ignore[assignment] — set by init/load
+    # full discovered link graph (`link_graph`): distinct (source_page_url,
+    # url) over the validity+filter-passed candidates of every round —
+    # INCLUDING edges whose target was already seen, so in-degree is a
+    # real signal (ADVICE r4 #1; the claim-tree `links` above has
+    # in-degree ≤ 1 by construction). `graph_base` holds the materialized
+    # part, `scores_base` its (url, in_degree) delta rows, one batch per
+    # materialization; `in_degrees` folds them. Compaction/checkpoint
+    # collapse the scores to one row per url.
+    graph_base: DataFrame = None  # type: ignore[assignment] — set by init/load
+    scores_base: DataFrame = None  # type: ignore[assignment] — set by init/load
     page_events: DataFrame | None = None
     content_events: DataFrame | None = None
+    # the rounds' filter-passed edges not yet in graph_base: a lazy union
+    # over the rounds' fetch leaves, first-parse guard not yet applied. A
+    # crawl that never reads the graph (in-memory FIFO) never runs a job
+    # for it; the first read of link_graph / link_scores / in_degrees
+    # materializes the whole log at once (_materialize_edges).
+    edge_events: DataFrame | None = None
     bloom: PartitionedBloomSeen | None = None
     # True until a durable checkpoint backs the base tables: lets the
     # views skip the full-outer join against a provably-empty base (one
@@ -248,6 +254,16 @@ class CrawlState:
         return combine_content(self.content_base, self.content_events)
 
     @property
+    def link_graph(self) -> DataFrame:
+        self._materialize_edges()
+        return self.graph_base
+
+    @property
+    def link_scores(self) -> DataFrame:
+        self._materialize_edges()
+        return self.scores_base
+
+    @property
     def in_degrees(self) -> DataFrame:
         """(url, in_degree) over the discovered link graph — the scored
         pop's priority key, folded from the per-round delta log (never a
@@ -255,6 +271,72 @@ class CrawlState:
         return self.link_scores.groupBy("url").agg(
             F.sum("in_degree").cast("long").alias("in_degree")
         )
+
+    def pending_edges(self) -> DataFrame | None:
+        """The edges of `edge_events` that belong in the graph, unmaterialized
+        (None when nothing is pending).
+
+        A re-parsed page re-emits its whole edge set (a re-claimed seed
+        parses twice even without recrawl; recrawl re-parses everything),
+        so only FIRST-parse sources count and the accumulated graph stays
+        distinct (matches the reference, whose seen-set drops every
+        re-discovered link — schedule_service.py:66-84). An edge is kept
+        iff its source has no earlier parse: none in the checkpointed
+        `content_base`, none in `content_events` before the edge's round.
+
+        That is an anti join, written as a LEFT join that keeps the
+        unmatched rows: the optimizer pushes a semi or anti join into each
+        branch of a union, which would re-read every earlier content leaf
+        once per pending round. The outer join reads each pending round's
+        edges and each content leaf once, so the plan stays O(rounds)
+        however many rounds are pending."""
+        if self.edge_events is None:
+            return None
+        # edge_events always holds the newest round (only materializing
+        # clears it), and no parse of that round precedes an edge: the
+        # filter prunes its content branch, so a single pending round
+        # reads no content leaf at all
+        parses = self.content_events.filter(F.col("_round") < self.round - 1).select(
+            "source_page_url", "_round"
+        )
+        if not self.bases_empty:
+            # a source parsed before the last checkpoint precedes any round
+            parses = parses.unionByName(
+                self.content_base.select("source_page_url", F.lit(-1).alias("_round"))
+            )
+        earlier = (F.col("e.source_page_url") == F.col("p.source_page_url")) & (
+            F.col("p._round") < F.col("e.discovered_round")
+        )
+        return (
+            self.edge_events.alias("e")
+            .join(parses.alias("p"), earlier, "left")
+            .filter(F.col("p._round").isNull())
+            .select("e.*")
+            .dropDuplicates(["source_page_url", "url"])
+        )
+
+    def _materialize_edges(self) -> None:
+        """Fold every pending round into the graph in one step: one edge
+        leaf, plus one score leaf of per-(url, round) in-degree deltas that
+        the scored pop sums instead of re-aggregating the edge table.
+        Both are local checkpoints, so no later read recomputes the guard.
+        They are lazy ones: with AQE on, building one runs the shuffle
+        stages of its plan here, and the reader's own action (the pop, or
+        a checkpoint's table writes) computes and keeps the rest. An eager
+        checkpoint would add one count job per leaf."""
+        edges = self.pending_edges()
+        if edges is None:
+            return
+        edges = edges.localCheckpoint(eager=False)
+        scores = (
+            edges.groupBy("url", "discovered_round")
+            .agg(F.count("*").cast("long").alias("in_degree"))
+            .select("url", "in_degree", F.col("discovered_round").alias("scored_round"))
+            .localCheckpoint(eager=False)
+        )
+        self.graph_base = self.graph_base.unionByName(edges)
+        self.scores_base = self.scores_base.unionByName(scores)
+        self.edge_events = None
 
     def tables(self) -> dict[str, DataFrame]:
         return {
@@ -294,8 +376,8 @@ def init_state(spark: SparkSession, seeds: list[str]) -> CrawlState:
         content_base=schemas.empty_df(spark, schemas.PAGE_CONTENT_DDL),
         invalid_rows=schemas.empty_df(spark, schemas.INVALID_DDL),
         retries=schemas.empty_df(spark, schemas.RETRIES_DDL),
-        link_graph=schemas.empty_df(spark, schemas.LINK_GRAPH_DDL),
-        link_scores=schemas.empty_df(spark, schemas.LINK_SCORES_DDL),
+        graph_base=schemas.empty_df(spark, schemas.LINK_GRAPH_DDL),
+        scores_base=schemas.empty_df(spark, schemas.LINK_SCORES_DDL),
     )
 
 
@@ -489,9 +571,10 @@ def run_round(
 ) -> tuple[CrawlState, dict]:
     """Execute one BFS round; returns (new_state, round_counters).
 
-    Only O(round-delta) data is materialized (localCheckpoint): the fetch
-    outcome events, the parsed-content events, and the claimed links. The
-    accumulated tables grow as lazy unions over those checkpointed leaves.
+    Only O(round-delta) data is materialized (localCheckpoint): the popped
+    batch, the fetch+parse outcome and the claimed links. The accumulated
+    tables, the event logs and the link-graph edge log grow as lazy unions
+    over those checkpointed leaves.
     """
     rnd = state.round
     round_ts = cfg.crawl_epoch + timedelta(seconds=rnd)
@@ -523,7 +606,8 @@ def run_round(
         from wikifrontier.politeness import scored_pop
 
         # incremental in-degree state: the fold below reads the per-round
-        # (url, d) delta log, never the edge table itself
+        # (url, d) delta log, never the edge table itself. Reading it
+        # materializes the rounds' pending edges first (one step for all)
         batch = scored_pop(pending, state.in_degrees, cfg.budget_per_round)
     else:
         batch = pop_frontier(pending, cfg.budget_per_round)
@@ -712,53 +796,25 @@ def run_round(
         n_claimed_hint = state.bloom.add_df(spark, claimed.select("url"))
 
     # --- full link-graph delta (ADVICE r4 #1) ------------------------------
-    # Every distinct (source, url) pair among the validity+filter-passed
-    # candidates — PRE-seen and PRE-claim, so edges into already-crawled
-    # pages are kept and in-degree is a real priority signal (the
-    # claim-tree `links` table keeps reference parity; this is the edge
-    # relation its composite PK was built for, models.py:108-155). The
-    # deltas are localCheckpoint(eager=False) leaves, read by the scored
-    # pop, the checkpoint and linkrank; with AQE on, building one still runs
-    # the shuffle stages of its plan, so a FIFO crawl pays for them too.
-    edge_delta = (
-        candidates.filter(reason_col.isNull())
-        .select(
-            "source_page_url",
-            "url",
-            "depth",
-            F.lit(rnd).cast("int").alias("discovered_round"),
-        )
-        .dropDuplicates(["source_page_url", "url"])
+    # Every (source, url) pair among the validity+filter-passed candidates
+    # — PRE-seen and PRE-claim, so edges into already-crawled pages are
+    # kept and in-degree is a real priority signal (the claim-tree `links`
+    # table keeps reference parity; this is the edge relation its
+    # composite PK was built for, models.py:108-155). The delta only joins
+    # the state's lazy edge log: the first-parse guard, the dedup and the
+    # in-degree fold run when a reader (the scored pop, the checkpoint,
+    # linkrank) first asks for the graph — never inside a FIFO round.
+    edge_delta = candidates.filter(reason_col.isNull()).select(
+        "source_page_url",
+        "url",
+        "depth",
+        F.lit(rnd).cast("int").alias("discovered_round"),
     )
-    # a re-parsed page re-emits its whole edge set (a re-claimed seed
-    # parses twice even without recrawl; recrawl re-parses everything):
-    # keep only FIRST-parse sources so the accumulated graph stays
-    # distinct (matches the reference, whose seen-set drops every
-    # re-discovered link — schedule_service.py:66-84). The guard
-    # anti-joins against the content-event LEAVES (urls only), never the
-    # accumulated edge deltas, so round r's delta does not chain on round
-    # r-1's and the plan depth stays flat.
-    prev_parsed = []
-    if state.content_events is not None:
-        prev_parsed.append(state.content_events.select("source_page_url"))
-    if not state.bases_empty:
-        prev_parsed.append(state.content_base.select("source_page_url"))
-    if prev_parsed:
-        prev_df = prev_parsed[0]
-        for extra in prev_parsed[1:]:
-            prev_df = prev_df.unionByName(extra)
-        edge_delta = edge_delta.join(prev_df, "source_page_url", "left_anti")
-    edge_delta = edge_delta.localCheckpoint(eager=False)
-    new_link_graph = state.link_graph.unionByName(edge_delta)
-    # pre-aggregated per-round in-degree delta — the scored pop folds SUM
-    # over these tiny batches instead of re-aggregating the edge table
-    score_delta = (
-        edge_delta.groupBy("url")
-        .agg(F.count("*").cast("long").alias("in_degree"))
-        .withColumn("scored_round", F.lit(rnd).cast("int"))
-        .localCheckpoint(eager=False)
+    new_edge_events = (
+        edge_delta
+        if state.edge_events is None
+        else state.edge_events.unionByName(edge_delta)
     )
-    new_link_scores = state.link_scores.unionByName(score_delta)
 
     new_seen = state.seen.unionByName(
         claimed.select("url", "depth", F.lit(rnd).alias("claimed_round"), "source_page_url")
@@ -892,10 +948,13 @@ def run_round(
             filtered_robots=unseen_by_reason.get("robots_txt", 0),
             links_claimed=sum(by_src.get("claim", {}).values()),
         )
-        metrics_row = spark.createDataFrame(
-            [tuple(counters.get(f.name) for f in schemas.ddl_to_schema(schemas.METRICS_DDL))],
-            schemas.ddl_to_schema(schemas.METRICS_DDL),
-        )
+        # a one-partition row of literals: createDataFrame would spread it
+        # over defaultParallelism partitions, and every later read and
+        # commit of `metrics` would run a task for each empty one
+        metrics_row = spark.range(1, numPartitions=1).select(*[
+            F.lit(counters.get(f.name)).cast(f.dataType).alias(f.name)
+            for f in schemas.ddl_to_schema(schemas.METRICS_DDL)
+        ])
         new_metrics = state.metrics.unionByName(metrics_row)
     else:
         new_metrics = state.metrics
@@ -910,10 +969,11 @@ def run_round(
         content_base=state.content_base,
         invalid_rows=new_invalid,
         retries=new_retries,
-        link_graph=new_link_graph,
-        link_scores=new_link_scores,
+        graph_base=state.graph_base,
+        scores_base=state.scores_base,
         page_events=new_page_events,
         content_events=new_content_events,
+        edge_events=new_edge_events,
         bloom=state.bloom,
         bases_empty=state.bases_empty,
         # hint is only sound when next round's pending is exactly this
@@ -1031,17 +1091,18 @@ def run_crawl(
             state = _commit(spark, state, cfg)
     finally:
         if corpus_bucketed is not None:
-            # round outputs are localCheckpoint'd leaves — nothing in the
-            # returned state depends on the corpus lineage
+            # every returned table, the pending edge log included, reads
+            # only localCheckpoint'd round leaves — nothing in the returned
+            # state depends on the corpus lineage
             corpus_bucketed.unpersist(blocking=False)
         # ADVICE r3 #5: every bloom in this function was materialized
         # here (fresh via _new_bloom or re-opened by load_checkpoint);
         # when it fell back to a driver-local tempdir (no
         # bloom_storage_dir configured), remove it — the checkpoint copy
-        # of the shards (written above) is the durable one, and every
-        # returned round output is a localCheckpoint'd leaf that never
-        # re-reads the working shards. A caller-provided storage dir
-        # stays, and the returned state keeps its filter.
+        # of the shards (written above) is the durable one, and no
+        # returned table (nor the edge log its first link-graph read
+        # materializes) re-reads the working shards. A caller-provided
+        # storage dir stays, and the returned state keeps its filter.
         if state.bloom is not None and state.bloom._owns_dir:
             state.bloom.cleanup()
             state.bloom = None

@@ -153,10 +153,9 @@ def write_checkpoint(
         chain = list(prev_manifest.get("chain", [prev_round])) + [state.round]
         written = {"pending": state.pending, "retries": state.retries}
         for name, rcol in DELTA_ROUND_COLS.items():
-            src = state.link_scores if name == "link_scores" else getattr(state, name)
             # rows born in rounds [prev_round, state.round): everything a
             # previous snapshot already holds carries col <= prev_round-1
-            written[name] = src.filter(F.col(rcol) >= F.lit(prev_round))
+            written[name] = getattr(state, name).filter(F.col(rcol) >= F.lit(prev_round))
         for name in EVENT_TABLES:
             ev = getattr(state, name)
             if ev is not None:
@@ -346,5 +345,6 @@ def _state_at(spark: SparkSession, ckpt_dir: str, n: int, manifest: dict, bloom)
         content_base = combine_content(content_base, spark.read.parquet(*ce_paths))
     return CrawlState(
         round=n, pages_base=pages_base, content_base=content_base,
+        graph_base=tables.pop("link_graph"), scores_base=tables.pop("link_scores"),
         bloom=bloom, bases_empty=False, **tables,
     )
