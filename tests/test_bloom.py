@@ -7,8 +7,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from wikifrontier import schemas
 from wikifrontier.frontier import CrawlConfig
-from wikifrontier.seen import PartitionedBloomSeen, drop_seen
+from wikifrontier.seen import PartitionedBloomSeen, claim_first_wins, drop_seen
 
 
 @pytest.fixture(scope="module")
@@ -101,6 +102,102 @@ class TestPartitionedBloom:
         bloom2 = PartitionedBloomSeen.load(snap)
         bloom2.add_df(spark, urls)
         assert loaded.storage_dir != snap and bloom2.storage_dir != snap
+
+
+def _link(source, url, seq, anchor):
+    return (source, url, 1, True, anchor, None, None, None, "internal", seq)
+
+
+class TestClaimUnseen:
+    """The bucket-keyed pass that claims, probes and grows the filter."""
+
+    def test_winners_equal_claim_first_wins(self, spark, tmp_path):
+        """Adversarial orderings: a source that is a prefix of another,
+        non-ASCII and astral-plane sources (UTF-16 order would put the
+        astral one first; code-point and UTF-8 byte order do not), a NULL
+        source, clamped negative and NULL seqs, and ties on in_page_seq
+        broken by the source."""
+        w = "https://en.wikipedia.org/wiki/"
+        rows = [
+            # prefix: ".../A" beats ".../A_" although its seq is larger
+            _link(w + "A", w + "T1", 5, "prefix-short"),
+            _link(w + "A_", w + "T1", 1, "prefix-long"),
+            # U+FB01 sorts before U+1F600 by code point, after it in UTF-16
+            _link(w + "\ufb01", w + "T2", 3, "bmp"),
+            _link(w + "\U0001f600", w + "T2", 0, "astral"),
+            # a Latin-1 source sorts after every ASCII one
+            _link(w + "\u00c4", w + "T7", 0, "latin1"),
+            _link(w + "Zz", w + "T7", 9, "ascii"),
+            # a NULL source sorts first ('')
+            _link(w + "B", w + "T3", 0, "named"),
+            _link(None, w + "T3", 7, "null-source"),
+            # tie on in_page_seq, broken by the source
+            _link(w + "Z\u00e9", w + "T4", 2, "tie-z"),
+            _link(w + "Ze", w + "T4", 2, "tie-e"),
+            # a negative seq clamps to 0 and still loses to an earlier source
+            _link(w + "C", w + "T5", -4, "negative"),
+            _link(w + "B", w + "T5", 8, "positive"),
+            # a NULL seq counts as 0
+            _link(w + "D", w + "T6", None, "null-seq"),
+            _link(w + "D", w + "T6", 1, "seq-one"),
+            _link(w + "\u4e2d", w + "\U0001d4b3", 0, "single"),
+        ]
+        # spread over several partitions so no url's rows arrive together
+        cands = spark.createDataFrame(
+            rows * 2, schemas.ddl_to_schema(schemas.PARSED_LINK_FIELDS.replace(":", " "))
+        ).repartition(3)
+        seen = schemas.empty_df(spark, schemas.SEEN_DDL)
+        for buckets in (1, 4):
+            bloom = PartitionedBloomSeen(
+                storage_dir=str(tmp_path / f"claim{buckets}"), buckets=buckets,
+                nbits_per_bucket=1 << 12,
+            )
+            claimed, n = bloom.claim_unseen(spark, cands, seen)
+            want = claim_first_wins(cands)
+            assert n == 8
+            assert sorted(map(tuple, claimed.select(*want.columns).collect())) == sorted(
+                map(tuple, want.collect())
+            )
+            assert {r["url"]: r["anchor_text"] for r in claimed.collect()} == {
+                w + "T1": "prefix-short", w + "T2": "bmp", w + "T3": "null-source",
+                w + "T4": "tie-e", w + "T5": "positive", w + "T6": "null-seq",
+                w + "T7": "ascii", w + "\U0001d4b3": "single",
+            }
+
+    def test_seen_rows_dropped_and_bits_added(self, spark, urls, tmp_path):
+        """Seen winners are dropped exactly, and the filter ends with the
+        bits ``add_df`` over the claimed rows gives, without a false
+        negative."""
+        import numpy as np
+
+        from wikifrontier.seen import _read_shard_files
+
+        cands = urls.select(
+            F.lit("https://en.wikipedia.org/wiki/S").alias("source_page_url"),
+            "url", F.lit(1).alias("depth"), F.lit(True).alias("is_internal"),
+            F.lit("a").alias("anchor_text"), F.lit(None).cast("string").alias("title_attribute"),
+            F.lit(None).cast("string").alias("rel_attribute"),
+            F.lit(None).cast("string").alias("id_attribute"),
+            F.lit("internal").alias("link_type"), F.lit(0).alias("in_page_seq"),
+        )
+        seen = urls.filter(F.xxhash64("url") % 3 == 0)
+        bloom = PartitionedBloomSeen(
+            storage_dir=str(tmp_path / "pass"), buckets=4, nbits_per_bucket=1 << 12, k=5,
+        )
+        bloom.add_df(spark, seen)
+        claimed, n = bloom.claim_unseen(spark, cands, seen)
+        want = {r["url"] for r in urls.join(seen, "url", "left_anti").collect()}
+        assert {r["url"] for r in claimed.collect()} == want and n == len(want)
+
+        ref = PartitionedBloomSeen(
+            storage_dir=str(tmp_path / "ref"), buckets=4, nbits_per_bucket=1 << 12, k=5,
+        )
+        ref.add_df(spark, urls)
+        for b in range(4):
+            assert np.array_equal(
+                _read_shard_files(bloom.storage_dir, b, (1 << 12) >> 6),
+                _read_shard_files(ref.storage_dir, b, (1 << 12) >> 6),
+            ), b
 
 
 @pytest.mark.parametrize("buckets", [0, -4, 6])

@@ -354,28 +354,31 @@ class TestLinkGraph:
     def test_fifo_round_runs_no_job_after_bloom_add(
         self, spark, corpus, monkeypatch
     ):
-        """An in-memory FIFO round with counters off ends at the Bloom add:
-        the link-graph delta, the seen/links/pending unions and the event
-        logs are all lazy, so nothing after ``add_df`` starts a Spark job."""
+        """An in-memory FIFO round with counters off ends at its last
+        seen-set action, the claimed leaf (whose pass also adds the round's
+        bits to the Bloom filter): the link-graph delta, the
+        seen/links/pending unions and the event logs are all lazy, so
+        nothing after ``claim_unseen`` returns starts a Spark job."""
         from wikifrontier import frontier
         from wikifrontier.seen import PartitionedBloomSeen
 
         cfg = CrawlConfig(robots_txt=synth.ROBOTS_TXT, collect_metrics=False)
         sc = spark.sparkContext
-        add_df = PartitionedBloomSeen.add_df
+        claim_unseen = PartitionedBloomSeen.claim_unseen
         group = {}
 
-        def add_then_mark(self, *args, **kwargs):
-            out = add_df(self, *args, **kwargs)
-            sc.setJobGroup(group["id"], "after PartitionedBloomSeen.add_df")
+        def claim_then_mark(self, *args, **kwargs):
+            out = claim_unseen(self, *args, **kwargs)
+            sc.setJobGroup(group["id"], "after PartitionedBloomSeen.claim_unseen")
+            group["marks"] = group.get("marks", 0) + 1
             return out
 
-        monkeypatch.setattr(PartitionedBloomSeen, "add_df", add_then_mark)
+        monkeypatch.setattr(PartitionedBloomSeen, "claim_unseen", claim_then_mark)
         state = frontier.init_state(spark, [synth.page_url(synth.SEED_ID)])
         bloom = state.bloom = frontier._new_bloom(cfg)
         try:
             for rnd in range(3):
-                group["id"] = f"after-bloom-add-{rnd}"
+                group["id"] = f"after-claimed-leaf-{rnd}"
                 state, _ = frontier.run_round(spark, state, corpus, cfg)
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 jobs = sc.statusTracker().getJobIdsForGroup(group["id"])
@@ -383,6 +386,7 @@ class TestLinkGraph:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             bloom.cleanup()
+        assert group["marks"] == 3  # every round set the mark
         assert state.edge_events is not None  # three rounds still pending
         assert state.link_graph.count() > 0
 
@@ -446,6 +450,146 @@ class TestLinkGraph:
         assert sorted(map(tuple, windowed.in_degrees.collect())) == sorted(
             map(tuple, fresh.in_degrees.collect())
         )
+
+
+@pytest.fixture(scope="module")
+def bloom_crawl(spark, corpus, tmp_path_factory):
+    """The default crawl with a caller-owned shard dir, so its Bloom
+    shards outlive ``run_crawl``."""
+    from dataclasses import replace
+
+    cfg = replace(DEFAULT_CFG, bloom_storage_dir=str(tmp_path_factory.mktemp("shards")))
+    return run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], cfg)
+
+
+def _bitmaps(bloom):
+    from wikifrontier.seen import _read_shard_files
+
+    return [
+        _read_shard_files(bloom.storage_dir, b, bloom.nbits >> 6)
+        for b in range(bloom.buckets)
+    ]
+
+
+def _claimed_rows(state):
+    return (
+        sorted(map(tuple, state.seen.collect())),
+        sorted(map(tuple, state.links.collect())),
+        sorted(map(tuple, state.metrics.collect())),
+    )
+
+
+class TestBloomPass:
+    """The round's one claim + probe + Bloom-add pass
+    (``PartitionedBloomSeen.claim_unseen``)."""
+
+    def test_bitmaps_equal_add_df_over_seen(self, spark, corpus, bloom_crawl, tmp_path):
+        """Every bucket's bitmap equals the one a fresh filter gets from
+        ``add_df(seen)``, the state equals the simulator, and the claimed
+        rows equal those of a crawl without the filter."""
+        from dataclasses import replace
+
+        import numpy as np
+
+        from wikifrontier.seen import PartitionedBloomSeen
+
+        state = bloom_crawl
+        _assert_state_matches(state, simulate_crawl(N, max_rounds=10))
+        bloom = state.bloom
+        fresh = PartitionedBloomSeen(
+            storage_dir=str(tmp_path / "fresh"), buckets=bloom.buckets,
+            nbits_per_bucket=bloom.nbits, k=bloom.k,
+        )
+        fresh.add_df(spark, state.seen.select("url"))
+        got, want = _bitmaps(bloom), _bitmaps(fresh)
+        assert any(m.any() for m in want)
+        for b in range(bloom.buckets):
+            assert np.array_equal(got[b], want[b]), b
+
+        plain = run_crawl(
+            spark, corpus, [synth.page_url(synth.SEED_ID)],
+            replace(DEFAULT_CFG, bloom_bits=None),
+        )
+        assert _claimed_rows(state) == _claimed_rows(plain)
+
+    def test_earlier_attempt_delta_changes_nothing(
+        self, spark, corpus, bloom_crawl, tmp_path, monkeypatch
+    ):
+        """A delta of the round's own version left by a failed earlier
+        attempt (here: bits of half of round 2's new urls, written before
+        the round runs) only flags rows for the exact check. The claimed
+        rows, the counters and every final bitmap stay as without it."""
+        from dataclasses import replace
+
+        import numpy as np
+
+        from wikifrontier.seen import PartitionedBloomSeen, _bloom_positions
+
+        target = 2
+        ref = bloom_crawl
+        hashes = np.array(
+            [
+                r["h"]
+                for r in ref.seen.filter(F.col("claimed_round") == target)
+                .select(F.xxhash64("url").alias("h"))
+                .collect()
+            ][::2],
+            dtype=np.int64,
+        ).view(np.uint64)
+        assert len(hashes) > 0
+        claim_unseen = PartitionedBloomSeen.claim_unseen
+        injected = []
+
+        def inject_then_claim(self, *args, **kwargs):
+            if self.version == target:  # a fresh filter adds once a round
+                for b in range(self.buckets):
+                    h = hashes[hashes % np.uint64(self.buckets) == np.uint64(b)]
+                    if len(h) == 0:
+                        continue
+                    bm = np.zeros(self.nbits >> 6, dtype=np.uint64)
+                    for word, bit in _bloom_positions(h, self.nbits, self.k):
+                        np.bitwise_or.at(bm, word, np.uint64(1) << bit)
+                    np.save(
+                        f"{self.storage_dir}/bucket_{b}.v{self.version + 1}.a999.npy", bm
+                    )
+                    injected.append(b)
+            return claim_unseen(self, *args, **kwargs)
+
+        monkeypatch.setattr(PartitionedBloomSeen, "claim_unseen", inject_then_claim)
+        retried = run_crawl(
+            spark, corpus, [synth.page_url(synth.SEED_ID)],
+            replace(DEFAULT_CFG, bloom_storage_dir=str(tmp_path / "retry")),
+        )
+        assert injected
+        assert _claimed_rows(retried) == _claimed_rows(ref)
+        for b, (got, want) in enumerate(zip(_bitmaps(retried.bloom), _bitmaps(ref.bloom))):
+            assert np.array_equal(got, want), b
+
+    def test_init_state_tables_are_one_partition(self, spark, corpus, tmp_path):
+        """The seeded state's empty tables are relations of at most one
+        partition, and a fresh full commit of them resumes to the
+        simulator's crawl."""
+        from dataclasses import fields, replace
+
+        from wikifrontier import frontier
+
+        st = frontier.init_state(spark, [synth.page_url(synth.SEED_ID)])
+        empty = [
+            f.name for f in fields(st)
+            if f.name != "pending" and hasattr(getattr(st, f.name), "rdd")
+        ]
+        assert len(empty) == 9
+        for name in empty:
+            assert getattr(st, name).rdd.getNumPartitions() <= 1, name
+
+        ckpt = str(tmp_path / "ckpt_seeded")
+        cfg = CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=0, checkpoint_dir=ckpt)
+        run_crawl(spark, corpus, [synth.page_url(synth.SEED_ID)], cfg)
+        state = run_crawl(
+            spark, corpus, [synth.page_url(synth.SEED_ID)],
+            replace(cfg, max_rounds=10), resume=True,
+        )
+        _assert_state_matches(state, simulate_crawl(N, max_rounds=10))
 
 
 class TestCheckpointResume:

@@ -119,9 +119,10 @@ class CrawlConfig:
     # ~10 bits/URL for the target frontier (10^10 URLs → ~12 GiB total).
     bloom_bits: int | None = 1 << 22
     # shard count of the partitioned filter (seen.PartitionedBloomSeen;
-    # a power of two >= 1). Bitmap bytes never reach the driver, and the
-    # count bounds add_df's shuffle parallelism, so size it >= the
-    # executor-core count.
+    # a power of two >= 1). Bitmap bytes never reach the driver. The
+    # round's claim + probe + add pass shuffles on the bucket key, so the
+    # count bounds that pass's parallelism: size it >= the executor-core
+    # count.
     bloom_buckets: int = 64
     # shard-file directory of the partitioned filter. REQUIRED on a
     # multi-node cluster (a DFS/NFS/object-store mount visible to every
@@ -572,9 +573,12 @@ def run_round(
     """Execute one BFS round; returns (new_state, round_counters).
 
     Only O(round-delta) data is materialized (localCheckpoint): the popped
-    batch, the fetch+parse outcome and the claimed links. The accumulated
-    tables, the event logs and the link-graph edge log grow as lazy unions
-    over those checkpointed leaves.
+    batch, the fetch+parse outcome and the claimed links. With the Bloom
+    filter on, the claimed leaf is one bucket-keyed pass that claims,
+    probes the filter and adds the round's unseen winners to it
+    (``PartitionedBloomSeen.claim_unseen``); it is the round's last
+    seen-set action. The accumulated tables, the event logs and the
+    link-graph edge log grow as lazy unions over those checkpointed leaves.
     """
     rnd = state.round
     round_ts = cfg.crawl_epoch + timedelta(seconds=rnd)
@@ -665,8 +669,8 @@ def run_round(
             # auto, budgeted: the pop caps the batch below the limit a priori
             use_broadcast = True
         elif state.pending_rows_hint is not None:
-            # auto, unbounded: last round's claim count IS |pending| (free
-            # statistic from the bloom build — no count() job)
+            # auto, unbounded: last round's claim count IS |pending| (the
+            # claimed leaf's Observation — no count() job)
             use_broadcast = state.pending_rows_hint <= limit
         else:  # auto: count the popped batch (cheap — popped/pending are
             # materialized leaves) and gate on the configured row limit
@@ -775,25 +779,21 @@ def run_round(
 
     # F → D2 → D1: filter, claim, then the seen check. The state equals the
     # reference's D1 → F → D2 order (seen-dedup removes whole urls; the
-    # claim picks within-url winners — the two commute), but the anti-join
-    # probes only ~|winners| rows instead of every candidate, and the
-    # claim's url-shuffle is the single wide stage of the phase. The A6
+    # claim picks within-url winners — the two commute), but the seen check
+    # reads only ~|winners| rows instead of every candidate. The A6
     # counters below still attribute in the reference order.
-    winners = claim_first_wins(
-        candidates.withColumn("_reason", reason_col)
-        .filter(F.col("_reason").isNull())
-    ).localCheckpoint(eager=True)  # materialize BEFORE the bloom split —
-    # drop_seen's two branches each rescan their input, and rescanning
-    # the window subtree would double the round's widest stage
-    claimed = drop_seen(
-        winners, state.seen, state.bloom, spark
-    ).localCheckpoint(eager=True)
-
-    n_claimed_hint = None
-    if state.bloom is not None:
-        # incrementally fold the round's claims into the persistent filter
-        # (probe plans above already materialized against the old snapshot)
-        n_claimed_hint = state.bloom.add_df(spark, claimed.select("url"))
+    passed = candidates.filter(reason_col.isNull())
+    if state.bloom is None:
+        claimed = drop_seen(claim_first_wins(passed), state.seen).localCheckpoint(
+            eager=True
+        )
+        n_claimed_hint = None
+    else:
+        # one pass shuffled on the Bloom bucket key claims, probes the
+        # pre-round filter and writes the unseen winners' bits (one Python
+        # stage for all three); only maybe-seen winners meet the exact
+        # anti-join. The claim count comes with the leaf, at no job
+        claimed, n_claimed_hint = state.bloom.claim_unseen(spark, passed, state.seen)
 
     # --- full link-graph delta (ADVICE r4 #1) ------------------------------
     # Every (source, url) pair among the validity+filter-passed candidates
@@ -901,7 +901,7 @@ def run_round(
         # seen urls before filtering, so each candidate is tagged seen or
         # unseen and a filter counts only the unseen rows it rejects. The
         # tag is an exact existence join against the pre-round seen table,
-        # never the Bloom filter that bloom.add_df has grown. It reads the
+        # never the Bloom filter the round's pass has grown. It reads the
         # candidates once; a second, semi-joined copy of them doubled the
         # tally's time.
         tag = lambda df, src, k: df.select(  # noqa: E731

@@ -9,6 +9,7 @@ categories M:N collapses to ``array<string>`` on page_content.
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # input corpus (BASELINE.json input_hint)
@@ -110,4 +111,10 @@ def ddl_to_schema(ddl: str) -> T.StructType:
 
 
 def empty_df(spark, ddl: str):
-    return spark.createDataFrame([], ddl_to_schema(ddl))
+    """An empty table of schema ``ddl`` as a relation of one partition.
+    ``createDataFrame([])`` would give ``defaultParallelism`` empty
+    partitions, and every union that reads the table would run a task for
+    each of them."""
+    return spark.range(0, numPartitions=1).select(*[
+        F.lit(None).cast(f.dataType).alias(f.name) for f in ddl_to_schema(ddl)
+    ])

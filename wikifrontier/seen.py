@@ -15,17 +15,20 @@ Reference semantics:
 
 Bloom pre-filter: ``PartitionedBloomSeen`` (north_rule: "partitioned
 Bloom/cuckoo URL-seen set"). The bitmap is sharded into P buckets keyed by
-``pmod(xxhash64(url), P)``; each round's claims land as per-bucket delta
-files written executor-side by an ``applyInPandas`` group job, and the
-round checkpoint folds them into the snapshot. Probes load only the
-shards a task's rows touch (per-worker cache). Nothing bitmap-sized ever
-transits the driver and nothing is globally broadcast — at 10 bits/URL
-over a 10^10-URL frontier (~12 GiB of bitmap) each executor holds only
-its working set of ~12 GiB / P shards.
+``pmod(xxhash64(url), P)``. A round's D2 claim, D1 probe and Bloom add are
+ONE bucket-keyed pass (``claim_unseen``): the filter-passed candidates
+shuffle on the bucket key, and one pandas function per task claims the
+first-wins winners, probes their shards and writes the definitely-unseen
+winners' bits as per-bucket delta files; only maybe-seen winners meet the
+exact anti-join. The round checkpoint folds the deltas into the snapshot.
+Probes load only the shards a task's rows touch (per-worker cache).
+Nothing bitmap-sized ever transits the driver and nothing is globally
+broadcast — at 10 bits/URL over a 10^10-URL frontier (~12 GiB of bitmap)
+each executor holds only its working set of ~12 GiB / P shards.
 
-``drop_seen`` without a filter (``CrawlConfig.bloom_bits=None``) is the
-plain anti-join: the opt-out, and the reference the pre-filtered path is
-tested against.
+``claim_first_wins`` then ``drop_seen`` without a filter
+(``CrawlConfig.bloom_bits=None``) is the plain claim and anti-join: the
+opt-out, and the reference the pre-filtered path is tested against.
 """
 
 from __future__ import annotations
@@ -37,8 +40,9 @@ import tempfile
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from wikifrontier import fsio
 
@@ -64,6 +68,47 @@ def _bloom_positions(h: np.ndarray, nbits: int, k: int):
     for i in range(k):
         pos = (h1 + np.uint64(i) * h2) & np.uint64(nbits - 1)
         yield (pos >> np.uint64(6)).astype(np.int64), pos & np.uint64(63)
+
+
+def _probe_shard(bm: np.ndarray, h: np.ndarray, nbits: int, k: int) -> np.ndarray:
+    """Per hash of one shard: True iff all k of its bits are set in ``bm``."""
+    hit = np.ones(len(h), dtype=bool)
+    for word, bit in _bloom_positions(h, nbits, k):
+        hit &= ((bm[word] >> bit) & np.uint64(1)).astype(bool)
+    return hit
+
+
+def _write_delta(storage_dir: str, bucket: int, version: int, h: np.ndarray,
+                 nbits: int, k: int) -> None:
+    """Write the bits of hashes ``h`` (all of one bucket) as the immutable
+    delta file ``bucket_{b}.v{version}.a{taskAttemptId}.npy``."""
+    from pyspark import TaskContext
+
+    bm = np.zeros(nbits >> 6, dtype=np.uint64)
+    for word, bit in _bloom_positions(h, nbits, k):
+        np.bitwise_or.at(bm, word, np.uint64(1) << bit)
+    ctx = TaskContext.get()
+    attempt = ctx.taskAttemptId() if ctx is not None else os.getpid()
+    io_ = fsio.get_io(storage_dir)
+    path = io_.join(storage_dir, f"bucket_{bucket}.v{version}.a{attempt}.npy")
+    io_.write_bytes(path, _np_to_bytes(bm))
+
+
+def _claim_key(pdf: pd.DataFrame) -> pd.Series:
+    """``claim_first_wins``' order key, built in Python: source ‖ NUL ‖
+    10-digit seq, NULL source as '', seq NULL or negative as 0. Python
+    compares str by code point, which is the order of Spark's UTF-8 byte
+    comparison."""
+    seq = pdf["in_page_seq"].fillna(0).clip(lower=0).astype(np.int64)
+    return pdf["source_page_url"].fillna("") + "\x00" + seq.astype(str).str.zfill(10)
+
+
+def _first_wins(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The first-wins claim of ``claim_first_wins`` over one pandas frame
+    that holds every candidate of its urls: the row of least order key
+    per url."""
+    order = pdf.assign(_key=_claim_key(pdf)).sort_values("_key", kind="stable")
+    return order.drop_duplicates("url").drop(columns="_key")
 
 
 # per-worker shard cache: (dir, version, bucket) → bitmap. Lives in each
@@ -174,26 +219,28 @@ class PartitionedBloomSeen:
     bitmaps keyed by ``pmod(xxhash64(url), buckets)`` (ADVICE r1 #2 /
     VERDICT "What's wrong" #2 — no driver-global bitmap).
 
-    * build/update: claim deltas are grouped by bucket (one shuffle keyed
-      on the small bucket int); each group task writes an immutable
-      per-(version, task-attempt) DELTA file — never read-modify-write of
-      a shared file. Task retries and speculative attempts write byte-
-      identical duplicate deltas (the group's rows are deterministic), and
-      OR is idempotent, so a retried stage can never lose bits — a lost
-      bit would be a Bloom FALSE NEGATIVE, which drop_seen's fast path
-      treats as exact (VERDICT r2 "What's wrong" #2). The driver moves
-      zero bitmap bytes.
+    * build/update: a round's definitely-unseen claims are written by
+      ``claim_unseen``'s bucket-keyed pass (``add_df`` adds any url set —
+      the rebuild from ``seen``); each task writes, per bucket it holds,
+      an immutable per-(version, task-attempt) DELTA file — never
+      read-modify-write of a shared file. A retried or speculative
+      attempt writes a duplicate delta of the same rows (or, in the pass,
+      of a subset: rows an earlier attempt's delta flags go to the exact
+      check, and their bits are in that delta), and OR is idempotent, so
+      a retried stage can never lose bits — a lost bit would be a Bloom
+      FALSE NEGATIVE, which the unflagged fast path treats as exact
+      (VERDICT r2 "What's wrong" #2). The driver moves zero bitmap bytes.
     * compaction: ``compact(spark)`` folds each bucket's deltas into a
       new generation base file in one Spark job of
       min(buckets, defaultParallelism) tasks, each task folding its share
       of the buckets from a single listing of the working dir; the
       write-base-then-delete-deltas ordering keeps concurrent probes
       correct.
-    * probe: an Arrow-batched pandas UDF loads, per batch, only the
-      shards its rows hash into, through a per-worker cache — no global
-      broadcast. Callers that repartition candidates by the same bucket
-      key get one shard per task (the fully co-located layout); without
-      it a task touches at most min(batch buckets, P) shards.
+    * probe: ``claim_unseen`` probes inside its pass, where candidates
+      are already partitioned by bucket, so each shard is read by one
+      task. ``maybe_seen_col`` is the same probe as an Arrow-batched
+      pandas UDF over any frame: per batch it loads only the shards its
+      rows hash into, through a per-worker cache — no global broadcast.
     * checkpoint: ``save(path, spark=...)`` compacts and writes every
       bucket's newest base to the snapshot in that same single job, so
       the delta count stays O(rounds since last snapshot); ``load``
@@ -256,22 +303,12 @@ class PartitionedBloomSeen:
         number of rows added — free statistics callers reuse (e.g. as
         next round's frontier-size hint)."""
         nbits, k, d = self.nbits, self.k, self.storage_dir
-        nwords = nbits >> 6
         version = self.version + 1
 
         def write_delta(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            from pyspark import TaskContext
-
             bucket = int(key[0])
-            bm = np.zeros(nwords, dtype=np.uint64)
             h = pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
-            for word, bit in _bloom_positions(h, nbits, k):
-                np.bitwise_or.at(bm, word, np.uint64(1) << bit)
-            ctx = TaskContext.get()
-            attempt = ctx.taskAttemptId() if ctx is not None else os.getpid()
-            io_ = fsio.get_io(d)
-            path = io_.join(d, f"bucket_{bucket}.v{version}.a{attempt}.npy")
-            io_.write_bytes(path, _np_to_bytes(bm))
+            _write_delta(d, bucket, version, h, nbits, k)
             return pd.DataFrame({"bucket": [bucket], "n": [len(pdf)]})
 
         rows = (
@@ -354,13 +391,84 @@ class PartitionedBloomSeen:
             for b in np.unique(bks):
                 mask = bks == b
                 bm = _load_shard(d, version, int(b), nwords)
-                sub = np.ones(int(mask.sum()), dtype=bool)
-                for word, bit in _bloom_positions(hv[mask], nbits, k):
-                    sub &= ((bm[word] >> bit) & np.uint64(1)).astype(bool)
-                res[mask] = sub
+                res[mask] = _probe_shard(bm, hv[mask], nbits, k)
             return pd.Series(res)
 
         return probe(F.xxhash64(url_col))
+
+    def claim_unseen(
+        self, spark: SparkSession, candidates: DataFrame, seen: DataFrame
+    ) -> tuple[DataFrame, int]:
+        """D2 claim, D1 seen check and the Bloom add of one round.
+
+        ONE pass over ``candidates`` shuffled on ``bucket_col(url)``: per
+        task, a pandas function runs the first-wins claim (the order of
+        ``claim_first_wins``), probes each of its buckets' shards at the
+        pre-round version, writes each bucket's definitely-unseen winners
+        as one delta file of version+1 and returns the winners with a
+        ``_maybe_seen`` flag. Only flagged winners are checked exactly
+        against ``seen``; the claimed rows are the unflagged winners plus
+        the flagged ones ``seen`` does not hold.
+
+        A flagged row already has all k bits set, so a flagged row the
+        exact check claims (a false positive) adds no bit: every bitmap
+        ends as ``add_df`` over the claimed rows would leave it. A retried
+        task may see an earlier attempt's version+1 delta; that only flags
+        more rows, and flagged rows go to the exact check.
+
+        Returns the claimed rows as an eager local checkpoint, and their
+        count from an ``Observation`` on it (no count job)."""
+        nbits, k, d, buckets = self.nbits, self.k, self.storage_dir, self.buckets
+        version = self.version
+        nwords = nbits >> 6
+        out_schema = T.StructType(
+            candidates.schema.fields + [T.StructField("_maybe_seen", T.BooleanType())]
+        )
+
+        def claim_probe_add(batches):
+            # the whole partition at once: a url's candidates may span
+            # Arrow batches, and each bucket gets one delta per task
+            pdfs = list(batches)
+            if not pdfs:
+                return
+            won = _first_wins(pd.concat(pdfs, ignore_index=True))
+            h = won.pop("_h").to_numpy(dtype=np.int64).view(np.uint64)
+            bks = h % np.uint64(buckets)
+            maybe = np.ones(len(h), dtype=bool)
+            for b in np.unique(bks):
+                mask = bks == b
+                bm = _load_shard(d, version, int(b), nwords)
+                maybe[mask] = hits = _probe_shard(bm, h[mask], nbits, k)
+                if not hits.all():
+                    _write_delta(d, int(b), version + 1, h[mask][~hits], nbits, k)
+            yield won.assign(_maybe_seen=maybe)
+
+        # repartition, not a fixed count: AQE coalesces the small buckets
+        # into few tasks, and every candidate of a url lands in one task
+        flagged = (
+            candidates.withColumn("_h", F.xxhash64("url"))
+            .repartition(self.bucket_col(F.col("url")))
+            .mapInPandas(claim_probe_add, out_schema)
+        )
+        # one anti-join whose condition holds only for flagged rows: the
+        # pass runs once, so a row's flag and its exact check come from
+        # the same evaluation (two branches over an unmaterialized pass
+        # would run it twice, and the second run can see the first one's
+        # deltas)
+        seen_urls = seen.select(F.col("url").alias("_seen_url"))
+        obs = Observation()
+        claimed = (
+            flagged.join(
+                seen_urls,
+                (F.col("url") == F.col("_seen_url")) & F.col("_maybe_seen"),
+                "left_anti",
+            )
+            .drop("_maybe_seen")
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        self.version = version + 1
+        return claimed, obs.get["n"]
 
     # --- persistence (round checkpoint) ------------------------------------
     def save(self, path: str, spark: SparkSession) -> None:
