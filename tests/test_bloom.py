@@ -211,3 +211,76 @@ def test_bucket_count_not_power_of_two_rejected(buckets):
 def test_config_bucket_count_below_one_rejected(buckets):
     with pytest.raises(ValueError, match="bloom_buckets"):
         CrawlConfig(bloom_buckets=buckets)
+
+
+def test_add_df_warns_nothing(spark, urls, tmp_path):
+    """``add_df``'s grouped-map function has no type hints, so pyspark has
+    no eval type to infer and emits no ``UserWarning``."""
+    import warnings
+
+    bloom = PartitionedBloomSeen(
+        storage_dir=str(tmp_path / "nowarn"), buckets=4, nbits_per_bucket=1 << 12,
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        assert bloom.add_df(spark, urls.limit(50)) == 50
+
+
+def test_shard_read_survives_compaction_after_listing(tmp_path, monkeypatch):
+    """A compactor that writes base g+1, then deletes the deltas and the
+    old base, between the reader's listing and its first read loses no
+    bit: every listed file that vanished has its bits in the newer base,
+    which the reader finds by listing again. Runs without Spark."""
+    import numpy as np
+
+    from wikifrontier import fsio
+    from wikifrontier.seen import _np_from_bytes, _np_to_bytes, _read_shard_files
+
+    d, nwords = str(tmp_path), 8
+    io_ = fsio.get_io(d)
+    rng = np.random.default_rng(7)
+
+    def put(name):
+        bm = np.zeros(nwords, dtype=np.uint64)
+        for w, b in zip(rng.integers(0, nwords, 4), rng.integers(0, 64, 4)):
+            bm[w] |= np.uint64(1) << np.uint64(b)
+        io_.write_bytes(io_.join(d, name), _np_to_bytes(bm))
+        return bm
+
+    written = [put(nm) for nm in (
+        "bucket_2.g1.npy", "bucket_2.v3.a1.npy", "bucket_2.v3.a2.npy",
+        "bucket_2.v4.a9.npy",
+    )]
+    put("bucket_3.v3.a1.npy")  # another bucket's delta: never read
+    want = np.bitwise_or.reduce(written)
+
+    def compact():
+        names = [nm for nm in io_.listdir(d) if nm.startswith("bucket_2.")]
+        merged = np.bitwise_or.reduce(
+            [_np_from_bytes(io_.read_bytes(io_.join(d, nm))) for nm in names]
+        )
+        io_.write_bytes(io_.join(d, "bucket_2.g2.npy"), _np_to_bytes(merged))
+        for nm in names:
+            io_.remove(io_.join(d, nm))
+
+    calls = {"listdir": 0, "compacted": False}
+
+    class CompactBeforeFirstRead:
+        def __getattr__(self, name):
+            return getattr(io_, name)
+
+        def listdir(self, directory):
+            calls["listdir"] += 1
+            return io_.listdir(directory)
+
+        def read_bytes(self, path):
+            if not calls["compacted"]:
+                calls["compacted"] = True
+                compact()
+            return io_.read_bytes(path)
+
+    monkeypatch.setattr(fsio, "get_io", lambda path: CompactBeforeFirstRead())
+    got = _read_shard_files(d, 2, nwords)
+    assert calls == {"listdir": 2, "compacted": True}
+    assert sorted(io_.listdir(d)) == ["bucket_2.g2.npy", "bucket_3.v3.a1.npy"]
+    assert np.array_equal(got, want)

@@ -566,9 +566,9 @@ class TestBloomPass:
             assert np.array_equal(got, want), b
 
     def test_init_state_tables_are_one_partition(self, spark, corpus, tmp_path):
-        """The seeded state's empty tables are relations of at most one
-        partition, and a fresh full commit of them resumes to the
-        simulator's crawl."""
+        """The seeded state's empty tables, the two event logs included,
+        are relations the optimizer proves empty (0 partitions), and a
+        fresh full commit of them resumes to the simulator's crawl."""
         from dataclasses import fields, replace
 
         from wikifrontier import frontier
@@ -578,9 +578,9 @@ class TestBloomPass:
             f.name for f in fields(st)
             if f.name != "pending" and hasattr(getattr(st, f.name), "rdd")
         ]
-        assert len(empty) == 9
+        assert len(empty) == 11
         for name in empty:
-            assert getattr(st, name).rdd.getNumPartitions() <= 1, name
+            assert getattr(st, name).rdd.getNumPartitions() == 0, name
 
         ckpt = str(tmp_path / "ckpt_seeded")
         cfg = CrawlConfig(robots_txt=synth.ROBOTS_TXT, max_rounds=0, checkpoint_dir=ckpt)
@@ -590,6 +590,27 @@ class TestBloomPass:
             replace(cfg, max_rounds=10), resume=True,
         )
         _assert_state_matches(state, simulate_crawl(N, max_rounds=10))
+
+    def test_empty_tables_leave_the_plan(self, default_crawl):
+        """After an in-memory crawl the empty bases and the empty start of
+        each log are gone from the optimized plans: the pages and content
+        folds add no join to their event logs', and ``seen`` reads only
+        the rounds' claimed leaves."""
+        import re
+
+        def plan(df):
+            return df._jdf.queryExecution().optimizedPlan().toString()
+
+        def joins(df):
+            return re.findall(r"\bJoin \w+", plan(df))
+
+        state = default_crawl
+        assert joins(state.pages) == joins(state.page_events)
+        assert "FullOuter" not in plan(state.pages)
+        assert joins(state.page_content) == []
+        seen_plan = plan(state.seen)
+        assert "LogicalRDD" in seen_plan
+        assert "Range" not in seen_plan and "LocalRelation" not in seen_plan
 
 
 class TestCheckpointResume:

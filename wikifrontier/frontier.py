@@ -104,7 +104,7 @@ class CrawlConfig:
     # link_graph, link_scores, metrics, invalid_rows) write only rows born
     # since the previous snapshot (a filter on their monotone round
     # column), and pages/page_content write only the event log since the
-    # previous snapshot (merge-on-read: the loader folds base ⊕ events,
+    # previous snapshot (merge-on-read: the state folds base ⊕ events,
     # exactly Iceberg's MERGE-on-read delete/data-file split). After a
     # delta commit the crawl reads each table from its chain's parquet
     # segments, so N also bounds the segments every round scans. At a
@@ -201,9 +201,13 @@ class CrawlConfig:
 @dataclass
 class CrawlState:
     """Crawl state. `pages` / `page_content` are *views*: the base table
-    from the last durable checkpoint (or empty) combined with the
-    append-only event log accumulated since (`page_events` /
-    `content_events`, both None right after a checkpoint commit or load)."""
+    from the last full checkpoint (or empty) combined with the append-only
+    event log accumulated since (`page_events` / `content_events`: empty
+    in a fresh state and right after a full commit or load, the chain's
+    event segments after a delta one). An empty table is
+    ``schemas.empty_df``, which the optimizer proves empty: a fold against
+    it reduces to its non-empty side, so one code path serves a fresh
+    crawl and a resumed one."""
 
     round: int
     pending: DataFrame
@@ -224,8 +228,8 @@ class CrawlState:
     # collapse the scores to one row per url.
     graph_base: DataFrame = None  # type: ignore[assignment] — set by init/load
     scores_base: DataFrame = None  # type: ignore[assignment] — set by init/load
-    page_events: DataFrame | None = None
-    content_events: DataFrame | None = None
+    page_events: DataFrame = None  # type: ignore[assignment] — set by init/load
+    content_events: DataFrame = None  # type: ignore[assignment] — set by init/load
     # the rounds' filter-passed edges not yet in graph_base: a lazy union
     # over the rounds' fetch leaves, first-parse guard not yet applied. A
     # crawl that never reads the graph (in-memory FIFO) never runs a job
@@ -233,10 +237,6 @@ class CrawlState:
     # materializes the whole log at once (_materialize_edges).
     edge_events: DataFrame | None = None
     bloom: PartitionedBloomSeen | None = None
-    # True until a durable checkpoint backs the base tables: lets the
-    # views skip the full-outer join against a provably-empty base (one
-    # whole shuffle+join off the hot fold on never-checkpointed crawls)
-    bases_empty: bool = True
     # exact |pending| carried from the previous round when the loop can
     # prove it (unbounded, no recrawl/retry): saves the auto fetch-gate's
     # per-round count() job
@@ -244,14 +244,10 @@ class CrawlState:
 
     @property
     def pages(self) -> DataFrame:
-        if self.bases_empty and self.page_events is not None:
-            return fold_pages_insert(self.page_events)
         return combine_pages(self.pages_base, self.page_events)
 
     @property
     def page_content(self) -> DataFrame:
-        if self.bases_empty and self.content_events is not None:
-            return _latest_content(self.content_events)
         return combine_content(self.content_base, self.content_events)
 
     @property
@@ -296,15 +292,15 @@ class CrawlState:
         # edge_events always holds the newest round (only materializing
         # clears it), and no parse of that round precedes an edge: the
         # filter prunes its content branch, so a single pending round
-        # reads no content leaf at all
-        parses = self.content_events.filter(F.col("_round") < self.round - 1).select(
-            "source_page_url", "_round"
-        )
-        if not self.bases_empty:
-            # a source parsed before the last checkpoint precedes any round
-            parses = parses.unionByName(
+        # reads no in-memory content leaf at all
+        parses = (
+            self.content_events.filter(F.col("_round") < self.round - 1)
+            .select("source_page_url", "_round")
+            # a source parsed before the last full checkpoint precedes any round
+            .unionByName(
                 self.content_base.select("source_page_url", F.lit(-1).alias("_round"))
             )
+        )
         earlier = (F.col("e.source_page_url") == F.col("p.source_page_url")) & (
             F.col("p._round") < F.col("e.discovered_round")
         )
@@ -379,6 +375,8 @@ def init_state(spark: SparkSession, seeds: list[str]) -> CrawlState:
         retries=schemas.empty_df(spark, schemas.RETRIES_DDL),
         graph_base=schemas.empty_df(spark, schemas.LINK_GRAPH_DDL),
         scores_base=schemas.empty_df(spark, schemas.LINK_SCORES_DDL),
+        page_events=schemas.empty_df(spark, schemas.PAGE_EVENTS_DDL),
+        content_events=schemas.empty_df(spark, schemas.CONTENT_EVENTS_DDL),
     )
 
 
@@ -412,30 +410,6 @@ def _fold_page_events(events: DataFrame) -> DataFrame:
     )
 
 
-def fold_pages_insert(events: DataFrame) -> DataFrame:
-    """A1 fold when every row is an INSERT (no pre-existing base): the
-    same result combine_pages produces against an empty base, without the
-    full-outer join — the first event never counts as failed."""
-    agg = _fold_page_events(events)
-    return agg.select(
-        "url",
-        "last_crawl_status",
-        "http_status_code",
-        "url_hash",
-        "html_content_hash",
-        "compressed_filepath",
-        "last_crawled_at",
-        "next_crawl_at",
-        F.col("_n_events").cast("int").alias("total_crawl_attempts"),
-        (F.col("_n_failed_total") - F.col("_first_failed"))
-        .cast("int")
-        .alias("failed_crawl_attempts"),
-        "last_error_seen",
-        "depth",
-        F.col("_first_round").alias("first_crawled_round"),
-    )
-
-
 def _latest_content(events: DataFrame) -> DataFrame:
     """A3 last-write-wins fold of the content event log."""
     return events.groupBy("source_page_url").agg(
@@ -447,10 +421,10 @@ def _latest_content(events: DataFrame) -> DataFrame:
     )
 
 
-def combine_pages(base: DataFrame, events: DataFrame | None) -> DataFrame:
-    """base pages table ⊕ event log → current pages table (lazy)."""
-    if events is None:
-        return base
+def combine_pages(base: DataFrame, events: DataFrame) -> DataFrame:
+    """base pages table ⊕ event log → current pages table (lazy). Against
+    an empty base (``schemas.empty_df``) the optimizer drops the join: an
+    INSERT-only fold, where the first event never counts as failed."""
     agg = _fold_page_events(events)
     o, n = base.alias("o"), agg.alias("n")
     o_present = F.col("o.last_crawl_status").isNotNull()
@@ -494,11 +468,9 @@ def combine_pages(base: DataFrame, events: DataFrame | None) -> DataFrame:
     )
 
 
-def combine_content(base: DataFrame, events: DataFrame | None) -> DataFrame:
+def combine_content(base: DataFrame, events: DataFrame) -> DataFrame:
     """A3 — db_writer.py:164-217: last-write-wins upsert on
     source_page_url, over the parsed-content event log."""
-    if events is None:
-        return base
     latest = _latest_content(events)
     kept = base.join(latest.select("source_page_url"), "source_page_url", "left_anti")
     return kept.unionByName(latest)
@@ -880,18 +852,6 @@ def run_round(
     if not unbounded:
         new_pending = new_pending.localCheckpoint(eager=True)
 
-    # --- event-log accumulation -------------------------------------------
-    new_page_events = (
-        page_events_delta
-        if state.page_events is None
-        else state.page_events.unionByName(page_events_delta)
-    )
-    new_content_events = (
-        content_events_delta
-        if state.content_events is None
-        else state.content_events.unionByName(content_events_delta)
-    )
-
     # --- A6 metrics -------------------------------------------------------
     counters: dict = {"round": rnd}
     if cfg.collect_metrics:
@@ -971,11 +931,10 @@ def run_round(
         retries=new_retries,
         graph_base=state.graph_base,
         scores_base=state.scores_base,
-        page_events=new_page_events,
-        content_events=new_content_events,
+        page_events=state.page_events.unionByName(page_events_delta),
+        content_events=state.content_events.unionByName(content_events_delta),
         edge_events=new_edge_events,
         bloom=state.bloom,
-        bases_empty=state.bases_empty,
         # hint is only sound when next round's pending is exactly this
         # round's claims (nothing unpopped, no recrawl/retry re-enqueues)
         pending_rows_hint=(

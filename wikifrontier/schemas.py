@@ -9,7 +9,6 @@ categories M:N collapses to ``array<string>`` on page_content.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # input corpus (BASELINE.json input_hint)
@@ -65,12 +64,23 @@ PAGES_DDL = (
     "last_error_seen string, depth int, first_crawled_round int"
 )
 
+# event log that `pages` folds on read: one row per fetch outcome, stamped
+# with the `_round` that fetched it
+PAGE_EVENTS_DDL = (
+    "url string, last_crawl_status string, http_status_code int, "
+    "url_hash string, html_content_hash string, compressed_filepath string, "
+    "last_crawled_at timestamp, next_crawl_at timestamp, "
+    "last_error_seen string, depth int, _round int"
+)
+
 # parsed content (reference page_content, models.py:203-253; `summary` is
 # never written by the reference db_writer (db_writer.py:199-207) — dropped)
 PAGE_CONTENT_DDL = (
     "source_page_url string, title string, categories array<string>, "
     "text_content string, text_content_hash string, parsed_at timestamp"
 )
+# event log that `page_content` folds on read: one row per parse
+CONTENT_EVENTS_DDL = f"{PAGE_CONTENT_DDL}, _round int"
 
 # per-url failed-fetch attempt counters driving bounded retry
 # (reference download_retry: 2 attempts + grace,
@@ -111,10 +121,22 @@ def ddl_to_schema(ddl: str) -> T.StructType:
 
 
 def empty_df(spark, ddl: str):
-    """An empty table of schema ``ddl`` as a relation of one partition.
-    ``createDataFrame([])`` would give ``defaultParallelism`` empty
-    partitions, and every union that reads the table would run a task for
-    each of them."""
-    return spark.range(0, numPartitions=1).select(*[
-        F.lit(None).cast(f.dataType).alias(f.name) for f in ddl_to_schema(ddl)
-    ])
+    """An empty table of schema ``ddl`` that the optimizer proves empty.
+
+    A typed-null projection under ``WHERE false``: PruneFilters turns it
+    into an empty ``LocalRelation`` of 0 partitions, and
+    PropagateEmptyRelation then drops it from every union and reduces a
+    join against it (``combine_pages``' full outer join becomes its event
+    fold, ``combine_content``'s anti join its latest-content aggregate).
+    ``spark.range(0)`` alone is not enough: the optimizer does not treat
+    an empty Range as an empty relation, so the union branch and the join
+    stay in the plan. Nor is ``.limit(0)`` on it: EliminateLimits removes
+    a limit that the Range's row bound of 0 already meets.
+    ``createDataFrame([])`` is not empty to the optimizer either, and has
+    ``defaultParallelism`` partitions. The projection is one SQL
+    ``selectExpr``: a Column per field costs a JVM round trip each, and a
+    resumed state builds several empty tables per commit."""
+    return spark.range(0, numPartitions=1).selectExpr(*[
+        f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
+        for f in ddl_to_schema(ddl)
+    ]).where("false")

@@ -144,18 +144,9 @@ def _shard_files_by_bucket(names) -> dict[int, tuple[list[str], list[str]]]:
     return out
 
 
-def _best_base_path(io_, storage_dir: str, bucket: int) -> str | None:
-    """Path of the newest-generation base file for ``bucket``, or None."""
-    paths = io_.glob(storage_dir, f"bucket_{bucket}.npy") + io_.glob(
-        storage_dir, f"bucket_{bucket}.g*.npy"
-    )
-    if not paths:
-        return None
-    return max(paths, key=lambda p: _base_gen(io_.basename(p)))
-
-
 def _read_shard_files(storage_dir: str, bucket: int, nwords: int) -> np.ndarray:
-    """Current bitmap of one bucket = newest base file OR every delta.
+    """Current bitmap of one bucket = newest base file OR every delta,
+    from one directory listing.
 
     The protocol is rename-free so it is correct on object stores
     (VERDICT r3 "What's wrong" #1): every file is write-once — deltas
@@ -163,38 +154,38 @@ def _read_shard_files(storage_dir: str, bucket: int, nwords: int) -> np.ndarray:
     generation-numbered base (``bucket_{b}.g{gen}.npy``) instead of
     replacing in place. Against a concurrent compactor: the compactor
     writes the merged gen-N+1 base BEFORE deleting the deltas it folded
-    in and the older bases, so any file that vanishes between our glob
-    and our read already has its bits in a newer base — on a missing
-    delta or base we re-glob and OR in the newest base. OR-idempotence
-    makes double-counting harmless; a lost bit is impossible."""
+    in and the older bases, so any listed file that vanishes before we
+    read it already has its bits in a newer base — on a missing file we
+    re-list and OR in the newest base. OR-idempotence makes
+    double-counting harmless; a lost bit is impossible."""
     io_ = fsio.get_io(storage_dir)
+    bm = np.zeros(nwords, dtype=np.uint64)
 
-    # glob deltas FIRST, then resolve the base: see ordering argument
-    delta_paths = io_.glob(storage_dir, f"bucket_{bucket}.v*.npy")
+    def listing() -> tuple[list[str], list[str]]:
+        """The bucket's newest base (as a list of at most one) and deltas."""
+        bases, deltas = _shard_files_by_bucket(io_.listdir(storage_dir)).get(
+            bucket, ([], [])
+        )
+        return ([max(bases, key=_base_gen)] if bases else []), deltas
 
-    def load_base() -> np.ndarray | None:
-        for _ in range(2):  # one retry: base generation raced away
-            p = _best_base_path(io_, storage_dir, bucket)
-            if p is None:
-                return None
+    def or_in(names) -> bool:
+        """OR the listed files into ``bm``; False if one vanished."""
+        whole = True
+        for nm in names:
             try:
-                return _np_from_bytes(io_.read_bytes(p)).copy()
+                data = io_.read_bytes(io_.join(storage_dir, nm))
             except FileNotFoundError:
+                whole = False  # compacted away after the listing
                 continue
-        return None
+            np.bitwise_or(bm, _np_from_bytes(data), out=bm)
+        return whole
 
-    base = load_base()
-    bm = base if base is not None else np.zeros(nwords, dtype=np.uint64)
-    reread_base = False
-    for p in delta_paths:
-        try:
-            bm |= _np_from_bytes(io_.read_bytes(p))
-        except FileNotFoundError:
-            reread_base = True  # compacted away mid-read
-    if reread_base:
-        newer = load_base()
-        if newer is not None:
-            bm |= newer
+    base, deltas = listing()
+    whole = or_in(base + deltas)
+    while not whole:
+        # a newer base holds the vanished file's bits; it may itself be
+        # compacted away before we read it, so re-list until one reads
+        whole = or_in(listing()[0])
     return bm
 
 
@@ -305,7 +296,9 @@ class PartitionedBloomSeen:
         nbits, k, d = self.nbits, self.k, self.storage_dir
         version = self.version + 1
 
-        def write_delta(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        # no type hints: applyInPandas would try to infer an eval type from
+        # them and warn on every call
+        def write_delta(key, pdf):
             bucket = int(key[0])
             h = pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
             _write_delta(d, bucket, version, h, nbits, k)

@@ -19,12 +19,14 @@ Snapshot kinds (manifest v3 — VERDICT r5 scale item):
   links, link_graph, link_scores, metrics, invalid_rows) write just the
   rows born since the previous snapshot — a filter on their monotone
   round column, which parquet row-group min/max stats answer without
-  scanning old segments. The merge-tables pages/page_content write only
-  the EVENT LOG accumulated since the previous snapshot; the loader folds
-  base ⊕ events on read (Iceberg merge-on-read: data files + delta files,
-  compacted by the next full snapshot). The live tables (pending,
-  retries — O(frontier), not O(crawl)) and the bloom shards are always
-  written in full at the head.
+  scanning old segments. The merge-tables pages/page_content are not
+  written: their event logs (``page_events`` / ``content_events``) are
+  append-only tables like the others, and the state folds the chain
+  base's pages/page_content ⊕ the chain's event segments on read
+  (Iceberg merge-on-read: data files + delta files, compacted by the
+  next full snapshot, which writes the folds and no event log). The live
+  tables (pending, retries — O(frontier), not O(crawl)) and the bloom
+  shards are always written in full at the head.
 
 ``CrawlConfig.checkpoint_full_every`` bounds a delta chain: every Nth
 commit is full, so resume reads at most N-1 delta segments per table and
@@ -36,7 +38,10 @@ ONE parquet scan (same schema, multi-path read).
 A commit returns exactly the state ``load_checkpoint`` would load from
 it (both build it in ``_state_at``): a delta head is re-backed from its
 chain's parquet segments, with nothing re-materialized and no in-memory
-leaf of an earlier round kept.
+leaf of an earlier round kept. Every table of ``TABLE_DDLS`` is read
+with its schema, and a table no segment holds (the event logs of a
+chain with no delta round, a table newer than the snapshot) reads as
+``schemas.empty_df``, which the folds and unions over it optimize away.
 
 The manifest carries a format version (``manifest_version`` — bumped when
 the snapshot layout changes so an old engine never misreads a new layout).
@@ -71,6 +76,8 @@ TABLE_DDLS = {
     "metrics": schemas.METRICS_DDL,
     "invalid_rows": schemas.INVALID_DDL,
     "retries": schemas.RETRIES_DDL,
+    "page_events": schemas.PAGE_EVENTS_DDL,
+    "content_events": schemas.CONTENT_EVENTS_DDL,
 }
 
 # append-only state tables → the monotone round column a delta snapshot
@@ -82,11 +89,14 @@ DELTA_ROUND_COLS = {
     "link_scores": "scored_round",
     "metrics": "round",
     "invalid_rows": "rejected_round",
+    "page_events": "_round",
+    "content_events": "_round",
 }
 # live tables a snapshot always writes in full (current frontier + merged
 # retry counters — both O(frontier))
 LIVE_TABLES = ("pending", "retries")
-# merge-on-read event logs (pages / page_content deltas, folded on load)
+# merge-on-read event logs: only delta rounds hold them, since a full
+# snapshot writes their folds, pages and page_content, instead
 EVENT_TABLES = ("page_events", "content_events")
 
 # v1: unversioned round-3 layout (no manifest_version key).
@@ -156,10 +166,6 @@ def write_checkpoint(
             # rows born in rounds [prev_round, state.round): everything a
             # previous snapshot already holds carries col <= prev_round-1
             written[name] = getattr(state, name).filter(F.col(rcol) >= F.lit(prev_round))
-        for name in EVENT_TABLES:
-            ev = getattr(state, name)
-            if ev is not None:
-                written[name] = ev
     else:
         chain = [state.round]
         written = state.tables()
@@ -301,50 +307,43 @@ def _state_at(spark: SparkSession, ckpt_dir: str, n: int, manifest: dict, bloom)
     backed by parquet only — the one place a post-checkpoint state is
     built.
 
-    A delta head loads each append-only table as ONE multi-path parquet
-    scan over its chain segments (identical schema per segment), and the
-    pages/page_content views as the chain base folded with the replayed
-    event segments — then hands the folds to the state as new bases, so
-    the next delta snapshot never re-writes replayed events."""
-    from wikifrontier.frontier import CrawlState, combine_content, combine_pages
+    Every table is read the same way: ONE multi-path parquet scan over the
+    segments its rounds hold (identical schema per segment), or an empty
+    table when none does. The live tables read the head's segment, the
+    append-only tables every chain member's, the event logs the delta
+    members', and pages/page_content the chain base's; the state's views
+    fold base ⊕ events on read."""
+    from wikifrontier.frontier import CrawlState
 
     io_ = fsio.get_io(ckpt_dir)
     chain = manifest.get("chain", [n])
     dirs = {r: io_.join(ckpt_dir, f"round={r}") for r in chain}
 
-    def seg_paths(name: str, rounds) -> list[str]:
-        return [
-            f"{fsio.strip_scheme(dirs[r])}/{name}"
-            for r in rounds
-            if io_.exists(io_.join(dirs[r], name))
-        ]
-
     def read(name: str, rounds) -> "object":
         # tables absent on disk (e.g. a checkpoint written before a state
         # table existed) load as empty — ADVICE r2: resume must not break
         # on pre-existing snapshots when the schema set grows
-        paths = seg_paths(name, rounds)
-        schema = schemas.ddl_to_schema(TABLE_DDLS[name])
+        paths = [
+            f"{fsio.strip_scheme(dirs[r])}/{name}"
+            for r in rounds
+            if io_.exists(io_.join(dirs[r], name))
+        ]
         if not paths:
-            return spark.createDataFrame([], schema)
+            return schemas.empty_df(spark, TABLE_DDLS[name])
+        schema = schemas.ddl_to_schema(TABLE_DDLS[name])
         return spark.read.schema(schema).parquet(*paths)
 
     tables = {name: read(name, [n]) for name in LIVE_TABLES}
-    tables.update({name: read(name, chain) for name in DELTA_ROUND_COLS})
-    # merge-on-read: the chain base holds the folded tables; delta rounds
-    # hold event segments. Fold base ⊕ events lazily and hand the result
-    # to the state as the new base (events=None) — replayed events must
-    # not ride into the NEXT delta snapshot.
-    pages_base = read("pages", chain[:1])
-    content_base = read("page_content", chain[:1])
-    pe_paths = seg_paths("page_events", chain[1:])
-    ce_paths = seg_paths("content_events", chain[1:])
-    if pe_paths:
-        pages_base = combine_pages(pages_base, spark.read.parquet(*pe_paths))
-    if ce_paths:
-        content_base = combine_content(content_base, spark.read.parquet(*ce_paths))
+    tables.update({
+        # a full round's event-log dir can only be a leftover of an
+        # uncommitted delta attempt at that round: never replay it
+        name: read(name, chain[1:] if name in EVENT_TABLES else chain)
+        for name in DELTA_ROUND_COLS
+    })
     return CrawlState(
-        round=n, pages_base=pages_base, content_base=content_base,
+        round=n,
+        pages_base=read("pages", chain[:1]),
+        content_base=read("page_content", chain[:1]),
         graph_base=tables.pop("link_graph"), scores_base=tables.pop("link_scores"),
-        bloom=bloom, bases_empty=False, **tables,
+        bloom=bloom, **tables,
     )
